@@ -189,17 +189,11 @@ def test_semdedup_refuses_oversized_cell(spark, monkeypatch):
         "vec_id": range(30), "embedding": [v.tolist() for v in vecs],
     }))
     cents = [[float(x) for x in vecs[0]]]  # one cell holds everything
-    # shrink the bound so the 30-row cell trips it
-    src = similarity.semdedup.__code__
     out = similarity.semdedup(emb, cents, threshold=0.5, vectorized=True)
     # normal size: fine
     assert out.count() == 30
-    # patch the bound via a tiny wrapper: recompile not needed — the
-    # guard reads the closure constant, so drive it with a big n by
-    # constructing >bound rows is too slow; instead assert the guard
-    # string exists at the documented limit
-    import inspect
-
-    s = inspect.getsource(similarity.semdedup)
-    assert "max_cell = 20_000" in s and "use more centroids" in s
-    _ = src
+    # shrink the bound below the 30-row cell: the worker must refuse
+    monkeypatch.setattr(similarity, "SEMDEDUP_MAX_CELL", 29)
+    out = similarity.semdedup(emb, cents, threshold=0.5, vectorized=True)
+    with pytest.raises(Exception, match=r"ValueError: semdedup: cell 0 has 30 rows \(> 29\)"):
+        out.count()

@@ -182,3 +182,36 @@ def test_cli_approx_distinct_verb(spark, csv_path):
     }
     for ts, est in rows.items():
         assert abs(est - exact[ts]) / exact[ts] < 0.2, (ts, est, exact[ts])
+
+
+def test_default_driver_heap_fits_host():
+    """The derived default heap is half of physical memory, so it never
+    exceeds what the host has (a fixed 48g default could not start a
+    JVM on a 16 GB host)."""
+    import os
+
+    from tstoolbox_spark.session import _parse_gb, default_driver_memory
+
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    heap_gb = _parse_gb(default_driver_memory())
+    assert 1 <= heap_gb and heap_gb * (1 << 30) <= phys
+
+
+def test_cli_main_starts_on_default_session(csv_path):
+    """``python -m tstoolbox_spark`` builds its own session with the
+    default heap: a verb on a tiny CSV starts, prints, and exits 0."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(p for p in (root, env.get("PYTHONPATH")) if p)
+    proc = subprocess.run(
+        [sys.executable, "-m", "tstoolbox_spark", "aggregate",
+         f"--input_ts={csv_path}", "--groupby=D", "--statistic=sum"],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    lines = proc.stdout.strip().splitlines()
+    assert len(lines) == 3 and lines[1].startswith("2024-01-01"), proc.stdout

@@ -115,3 +115,22 @@ def test_batch_plan_codes_only_and_no_global_sort(spark, tmp_path):
     assert "TakeOrderedAndProject" not in plan
     assert "WindowGroupLimit" in plan
     out.count()
+
+
+def test_batch_refuses_oversized_probe_table(spark, monkeypatch):
+    """The probe table is collected to the driver, so its row count
+    (queries x min(nprobe, nlist)) is held to the broadcast row limit:
+    at the limit the batch runs, above it the batch refuses and names
+    the size."""
+    from tstoolbox_spark.pipeline import incremental_dedup
+
+    emb, vecs, cents, books = _toy(spark)
+    queries = spark.createDataFrame(pd.DataFrame({
+        "query_id": np.arange(3, dtype=np.int64),
+        "embedding": [vecs[i].tolist() for i in range(3)],
+    }))
+    monkeypatch.setattr(incremental_dedup, "BROADCAST_ROW_LIMIT", 6)
+    ivfpq_topk_batch(emb, queries, cents, books, k=3, nprobe=2)
+    monkeypatch.setattr(incremental_dedup, "BROADCAST_ROW_LIMIT", 5)
+    with pytest.raises(ValueError, match=r"probe table has 6 rows \(> 5\)"):
+        ivfpq_topk_batch(emb, queries, cents, books, k=3, nprobe=2)

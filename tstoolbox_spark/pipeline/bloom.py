@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..textops.dedup import md5int
+from . import partials
 
 #: default geometry — 1024 words = 64,512 bits; with k=4 the false-
 #: positive rate stays under 1% up to ~6,400 member ids per filter.
@@ -29,7 +29,7 @@ BLOOM_WORDS = 1024
 BLOOM_K = 4
 
 
-def _exploded_positions(
+def exploded_positions(
     df: DataFrame,
     id_col: str,
     k: int,
@@ -39,8 +39,12 @@ def _exploded_positions(
     """One row per (id, hash row): ``word`` index and single-bit
     ``mask``. Bit j of a key sits at md5(key || '|bf<j>') mod 63·W;
     the division/modulo stay on exact BIGINTs (word < W, bit < 63).
-    ``carry_cols`` pass through untouched (e.g. the event-time column
-    for the streaming twin)."""
+    ``carry_cols`` pass through untouched (e.g. the key and event-time
+    columns of a tiered filter)."""
+    # imported here: the textops package is heavy, and every pipeline
+    # import (Python workers included) loads this module via partials
+    from ..textops.dedup import md5int
+
     m = 63 * words
     tmp = df
     structs = []
@@ -68,26 +72,22 @@ def _exploded_positions(
 
 
 def bloom_build(
-    df: DataFrame,
-    id_col: str,
-    k: int = BLOOM_K,
-    words: int = BLOOM_WORDS,
+    df: DataFrame, id_col: str, k: int = BLOOM_K, words: int = BLOOM_WORDS,
 ) -> DataFrame:
-    """Build the filter: one row per set word, ``(word, mask)`` with
-    mask the bit_or of all member bits in that word. Output is bounded
-    by ``words`` rows regardless of input size.
+    """Build the filter (``partials.BLOOM``): one row per set word,
+    ``(word, mask)`` with mask the bit_or of all member bits in that
+    word. Output is bounded by ``words`` rows regardless of input size.
 
     Scale shape: a k-way explode of (word, bitmask) ints into one
     hash aggregate — partial aggregation collapses it map-side, the
     shuffle moves at most the word table.
     """
-    rows = _exploded_positions(df, id_col, k, words)
-    return rows.groupBy("word").agg(F.bit_or("mask").alias("mask"))
+    return partials.base(partials.BLOOM, df, None, value_col=id_col, k=k, words=words)
 
 
 def bloom_merge(parts: DataFrame) -> DataFrame:
     """Fold filters built over disjoint batches — bit_or, exact."""
-    return parts.groupBy("word").agg(F.bit_or("mask").alias("mask"))
+    return partials.cascade(partials.BLOOM, parts, None)
 
 
 def bloom_probe(
@@ -102,7 +102,7 @@ def bloom_probe(
     negatives). The word table is the BROADCAST build side (bounded at
     ``words`` rows); probes stream, and the only shuffle is the final
     per-probe groupBy."""
-    probe_rows = _exploded_positions(probes, id_col, k, words)
+    probe_rows = exploded_positions(probes, id_col, k, words)
     joined = probe_rows.join(
         F.broadcast(bloom.withColumnRenamed("mask", "__fmask")),
         "word",

@@ -26,7 +26,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..textops.dedup import md5int
+# ``partials`` names the grid argument below, so the module is aliased
+from . import partials as partial_specs
 
 #: default grid — ε ≈ 2e/2048 ≈ 0.0027 of the L1 mass, δ = 1/16
 CMS_DEPTH = 4
@@ -35,69 +36,50 @@ CMS_WIDTH = 2048
 
 def cms_bucket(key: Column, j: int, width: int = CMS_WIDTH) -> Column:
     """Row j's bucket for a key: md5(key || '|cms<j>') mod width."""
+    # imported here: the textops package is heavy, and every pipeline
+    # import (Python workers included) loads this module via partials
+    from ..textops.dedup import md5int
+
     return md5int(F.concat(key.cast("string"), F.lit(f"|cms{j}"))) % F.lit(
         width
     )
 
 
+def cms_pairs(key: Column, depth: int = CMS_DEPTH, width: int = CMS_WIDTH) -> Column:
+    """The key's ``depth`` grid cells as an array of (j, bucket)
+    structs — exploded by the partial build and by the probe side."""
+    return F.array(
+        *[
+            F.struct(F.lit(j).alias("j"), cms_bucket(key, j, width).alias("bucket"))
+            for j in range(depth)
+        ]
+    )
+
+
 def cms_partials(
-    df: DataFrame,
-    key_col: str,
-    tier: str | None = "1d",
-    ts_col: str = "ts",
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-    weight_col: str | None = None,
+    df: DataFrame, key_col: str, tier: str | None = "1d", ts_col: str = "ts",
+    depth: int = CMS_DEPTH, width: int = CMS_WIDTH, weight_col: str | None = None,
 ) -> DataFrame:
-    """Build the sketch grid: one row per (tier bucket, j, bucket)
-    with its counter. ``weight_col`` switches from row counts to
-    weighted counts (e.g. n_tok mass instead of sequence count).
+    """Build the sketch grid (``partials.CMS``): one row per (tier
+    bucket, j, bucket) with its counter. ``weight_col`` switches from
+    row counts to weighted counts (e.g. n_tok mass instead of sequence
+    count).
 
     Scale shape: a depth-way explode (rows × depth, all narrow ints)
     into one hash aggregate whose output is bounded by
     depth × width × tier-buckets rows — partial aggregation collapses
     the explosion map-side, so the shuffle moves at most the grid.
     """
-    k = F.col(key_col)
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("j"),
-                cms_bucket(k, j, width).alias("bucket"),
-            )
-            for j in range(depth)
-        ]
+    return partial_specs.base(
+        partial_specs.CMS, df, tier, (), ts_col,
+        value_col=key_col, depth=depth, width=width, weight_col=weight_col,
     )
-    w = F.col(weight_col).cast("long") if weight_col else F.lit(1).cast("long")
-    rows = df.select(
-        *( [F.col(ts_col)] if tier is not None else [] ),
-        F.explode(pairs).alias("jb"),
-        w.alias("__w"),
-    )
-    grp: list[Column] = []
-    if tier is not None:
-        from .rollup import TIERS
-
-        grp.append(F.date_trunc(TIERS[tier], F.col(ts_col)).alias("ts"))
-    return rows.groupBy(
-        *grp, F.col("jb.j").alias("j"), F.col("jb.bucket").alias("bucket")
-    ).agg(F.sum("__w").alias("cnt"))
 
 
 def cms_merge(partials: DataFrame, tier: str | None = None) -> DataFrame:
     """Fold finer partials into a coarser tier (or a single global
     grid when ``tier`` is None) — a plain re-sum, exact."""
-    if tier is None:
-        grp = [F.col("j"), F.col("bucket")]
-    else:
-        from .rollup import TIERS
-
-        grp = [
-            F.date_trunc(TIERS[tier], F.col("ts")).alias("ts"),
-            F.col("j"),
-            F.col("bucket"),
-        ]
-    return partials.groupBy(*grp).agg(F.sum("cnt").alias("cnt"))
+    return partial_specs.cascade(partial_specs.CMS, partials, tier)
 
 
 def cms_estimate(
@@ -121,17 +103,8 @@ def cms_estimate(
     appears anywhere.
     """
     k = F.col(key_col)
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("j"),
-                cms_bucket(k, j, width).alias("bucket"),
-            )
-            for j in range(depth)
-        ]
-    )
     probe_rows = probes.select(
-        *group_cols, k.alias(key_col), F.explode(pairs).alias("jb")
+        *group_cols, k.alias(key_col), F.explode(cms_pairs(k, depth, width)).alias("jb")
     ).select(
         *group_cols, key_col, F.col("jb.j").alias("j"),
         F.col("jb.bucket").alias("bucket"),

@@ -31,7 +31,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from . import rollup
+from . import partials, rollup
 
 OFFSET = 1_000_000
 
@@ -70,26 +70,16 @@ def dd_value(bucket: Column, alpha: float = 0.01) -> Column:
 
 
 def ddsketch_base(
-    df: DataFrame,
-    tier: str = "1d",
-    key_cols: tuple[str, ...] = ("source",),
-    value_col: str = "n_tok",
-    ts_col: str = "ts",
-    alpha: float = 0.01,
+    df: DataFrame, tier: str = "1d", key_cols: tuple[str, ...] = ("source",),
+    value_col: str = "n_tok", ts_col: str = "ts", alpha: float = 0.01,
 ) -> DataFrame:
-    """Per-tier-bucket DDSketch partials: rows (keys, ts, v=bucket,
-    cnt). Same single-shuffle shape as ``rollup.hist_base``; bucket
-    count per tier cell is bounded by ~2·ln(max/min)/ln(γ) (a few
-    hundred for any realistic double range), so partials stay tiny."""
-    unit = rollup.TIERS[tier]
-    return (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *key_cols,
-            F.date_trunc(unit, F.col(ts_col)).alias("ts"),
-            dd_bucket(F.col(value_col), alpha).alias("v"),
-        )
-        .agg(F.count("*").alias("cnt"))
+    """Per-tier-bucket DDSketch partials (``partials.DDSKETCH``): rows
+    (keys, ts, v=bucket, cnt), nulls dropped. Same single-shuffle shape
+    as ``rollup.hist_base``; bucket count per tier cell is bounded by
+    ~2·ln(max/min)/ln(γ) (a few hundred for any realistic double
+    range), so partials stay tiny."""
+    return partials.base(
+        partials.DDSKETCH, df, tier, key_cols, ts_col, value_col=value_col, alpha=alpha
     )
 
 
@@ -97,7 +87,7 @@ def ddsketch_cascade(
     finer: DataFrame, tier: str, key_cols: tuple[str, ...] = ("source",)
 ) -> DataFrame:
     """Sketch partials merge exactly like histograms: counts add."""
-    return rollup.hist_cascade(finer, tier, key_cols)
+    return partials.cascade(partials.DDSKETCH, finer, tier, key_cols)
 
 
 def ddsketch_quantiles(

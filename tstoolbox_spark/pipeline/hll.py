@@ -33,38 +33,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .rollup import TIERS
+from . import partials
 
 
 def hll_base(
-    df: DataFrame,
-    tier: str = "1h",
-    key_cols: tuple[str, ...] = ("source",),
-    value_col: str = "user_id",
-    ts_col: str = "ts",
-    lg_k: int = 12,
+    df: DataFrame, tier: str = "1h", key_cols: tuple[str, ...] = ("source",),
+    value_col: str = "user_id", ts_col: str = "ts", lg_k: int = 12,
 ) -> DataFrame:
-    """Raw rows → finest distinct-sketch tier: one binary sketch
-    column per (keys, bucket). Same single groupBy shuffle as
-    ``rollup_base``; the sketch aggregate is map-side combinable
-    (partial sketches union in the combiner)."""
-    unit = TIERS[tier]
-    return df.groupBy(
-        *key_cols, F.date_trunc(unit, F.col(ts_col)).alias("ts")
-    ).agg(
-        F.hll_sketch_agg(F.col(value_col), F.lit(lg_k)).alias("distinct_hll")
+    """Raw rows → finest distinct-sketch tier (``partials.HLL``): one
+    binary sketch column per (keys, bucket). Same single groupBy
+    shuffle as ``rollup_base``; the sketch aggregate is map-side
+    combinable (partial sketches union in the combiner)."""
+    return partials.base(
+        partials.HLL, df, tier, key_cols, ts_col, value_col=value_col, lg_k=lg_k
     )
 
 
-def hll_cascade(
-    finer: DataFrame, tier: str, key_cols: tuple[str, ...] = ("source",)
-) -> DataFrame:
+def hll_cascade(finer: DataFrame, tier: str, key_cols: tuple[str, ...] = ("source",)) -> DataFrame:
     """Finer sketch tier → coarser sketch tier (register-wise max via
     sketch union). Scans sketches, never raw rows."""
-    unit = TIERS[tier]
-    return finer.groupBy(
-        *key_cols, F.date_trunc(unit, F.col("ts")).alias("ts")
-    ).agg(F.hll_union_agg(F.col("distinct_hll")).alias("distinct_hll"))
+    return partials.cascade(partials.HLL, finer, tier, key_cols)
 
 
 def hll_estimate(
@@ -114,8 +102,8 @@ def phll_register_rows(
     value_col: str,
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """One (carry…, idx, rho) row per non-null value — the shared
-    front end of the batch partial and the streaming ingest twin.
+    """One (carry…, idx, rho) row per non-null value — the
+    pre-aggregation rows of ``partials.PHLL``.
 
     idx = low p bits of the 60-bit md5 hash; w = the next 32 bits;
     rho = position of w's leftmost 1-bit counted from the MSB of the
@@ -151,45 +139,23 @@ def phll_register_rows(
 
 
 def phll_partial(
-    df: DataFrame,
-    tier: str = "1h",
-    key_cols: tuple[str, ...] = ("source",),
-    value_col: str = "user_id",
-    ts_col: str = "ts",
+    df: DataFrame, tier: str = "1h", key_cols: tuple[str, ...] = ("source",),
+    value_col: str = "user_id", ts_col: str = "ts",
 ) -> DataFrame:
-    """Raw rows → finest portable-HLL register tier: one row per
-    (keys, bucket, register) holding max rho. Single hash-aggregate
-    shuffle; MAX partials combine map-side, and the output is bounded
-    at m=256 rows per (keys, bucket) whatever the input cardinality.
+    """Raw rows → finest portable-HLL register tier (``partials.PHLL``):
+    one row per (keys, bucket, register) holding max rho. Single
+    hash-aggregate shuffle; MAX partials combine map-side, and the
+    output is bounded at m=256 rows per (keys, bucket) whatever the
+    input cardinality.
     """
-    from .rollup import TIERS
-
-    unit = TIERS[tier]
-    bucketed = df.select(
-        *key_cols,
-        F.date_trunc(unit, F.col(ts_col)).alias("ts"),
-        value_col,
-    )
-    rows = phll_register_rows(
-        bucketed, value_col, carry_cols=(*key_cols, "ts")
-    )
-    return rows.groupBy(*key_cols, "ts", "idx").agg(
-        F.max("rho").alias("rho")
-    )
+    return partials.base(partials.PHLL, df, tier, key_cols, ts_col, value_col=value_col)
 
 
-def phll_cascade(
-    finer: DataFrame, tier: str, key_cols: tuple[str, ...] = ("source",)
-) -> DataFrame:
+def phll_cascade(finer: DataFrame, tier: str, key_cols: tuple[str, ...] = ("source",)) -> DataFrame:
     """Finer register tier → coarser (register-wise MAX). Scans the
     bounded register relation, never raw rows; also the late-partial
     fold (MAX is idempotent, so re-unioning a batch is safe)."""
-    from .rollup import TIERS
-
-    unit = TIERS[tier]
-    return finer.groupBy(
-        *key_cols, F.date_trunc(unit, F.col("ts")).alias("ts"), "idx"
-    ).agg(F.max("rho").alias("rho"))
+    return partials.cascade(partials.PHLL, finer, tier, key_cols)
 
 
 def phll_estimate(

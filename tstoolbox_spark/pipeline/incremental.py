@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import ParquetSnapshotCatalog
-from . import rollup
+from . import partials, rollup
 
 
 def merge_partials(
@@ -44,7 +44,7 @@ def merge_partials(
     """Re-aggregate partial rows at their OWN granularity — the merge
     step of an incremental refresh. ``date_trunc`` at the same unit is
     idempotent, so this is exactly ``rollup_cascade`` tier→tier."""
-    return rollup.rollup_cascade(parts, tier, key_cols)
+    return partials.cascade(partials.ROLLUP, parts, tier, key_cols)
 
 
 def incremental_tier_refresh(

@@ -30,61 +30,32 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-TIERS = {
-    "1m": "minute",
-    "1h": "hour",
-    "1d": "day",
-    # calendar tiers (variable length — partial merge still exact, but
-    # they are rollup targets only, never the TTL partition unit).
-    # NESTING CAVEAT: ISO weeks straddle month boundaries, so '1w'
-    # partials must NEVER cascade into '1mo' — a week's counts would
-    # land wholesale in the month of the week's Monday. Cascade both
-    # from '1d' (minute/hour/day/month nest exactly; week nests only
-    # over day and finer).
-    "1w": "week",
-    "1mo": "month",
-}
+from . import partials
+
+#: tier name → date_trunc unit (a view of ``partials.TIER_TABLE``)
+TIERS = {name: t.unit for name, t in partials.TIER_TABLE.items()}
 TIER_ORDER = ["1m", "1h", "1d"]
 
 PARTIAL_COLS = ["n_tok_sum", "n_tok_count", "n_tok_min", "n_tok_max"]
 
 
 def rollup_base(df: DataFrame, tier: str = "1m", key_cols: tuple[str, ...] = ("source",)) -> DataFrame:
-    """Raw sequences → finest tier partials."""
-    unit = TIERS[tier]
-    return df.groupBy(
-        *key_cols, F.date_trunc(unit, F.col("ts")).alias("ts")
-    ).agg(
-        F.sum("n_tok").alias("n_tok_sum"),
-        F.count("n_tok").alias("n_tok_count"),
-        F.min("n_tok").alias("n_tok_min"),
-        F.max("n_tok").alias("n_tok_max"),
-    )
+    """Raw sequences → finest tier partials (``partials.ROLLUP``)."""
+    return partials.base(partials.ROLLUP, df, tier, key_cols)
 
 
 def rollup_cascade(finer: DataFrame, tier: str, key_cols: tuple[str, ...] = ("source",)) -> DataFrame:
     """Finer-tier partials → coarser tier partials (partial merge)."""
-    unit = TIERS[tier]
-    return finer.groupBy(
-        *key_cols, F.date_trunc(unit, F.col("ts")).alias("ts")
-    ).agg(
-        F.sum("n_tok_sum").alias("n_tok_sum"),
-        F.sum("n_tok_count").alias("n_tok_count"),
-        F.min("n_tok_min").alias("n_tok_min"),
-        F.max("n_tok_max").alias("n_tok_max"),
-    )
+    return partials.cascade(partials.ROLLUP, finer, tier, key_cols)
 
 
 def hist_base(
-    df: DataFrame,
-    tier: str = "1h",
-    key_cols: tuple[str, ...] = ("source",),
-    value_col: str = "n_tok",
-    ts_col: str = "ts",
+    df: DataFrame, tier: str = "1h", key_cols: tuple[str, ...] = ("source",),
+    value_col: str = "n_tok", ts_col: str = "ts",
 ) -> DataFrame:
-    """Value-count HISTOGRAM partials: one row per (key, bucket,
-    distinct value). Quantiles are holistic — they cannot be
-    materialized as sum/count partials — but over a BOUNDED integer
+    """Value-count HISTOGRAM partials (``partials.HIST``): one row per
+    (key, bucket, distinct value). Quantiles are holistic — they cannot
+    be materialized as sum/count partials — but over a BOUNDED integer
     domain (token counts are 1..512, TPC-H quantities 1..50) the full
     histogram is a tiny, losslessly composable partial: rows per tier
     bucket <= |domain|, merging = adding counts. This buys EXACT
@@ -92,22 +63,12 @@ def hist_base(
     TimescaleDB ``percentile_agg`` continuous-aggregate shape, exact
     instead of sketched. Same groupBy shuffle as ``rollup_base``.
     """
-    unit = TIERS[tier]
-    return df.groupBy(
-        *key_cols,
-        F.date_trunc(unit, F.col(ts_col)).alias("ts"),
-        F.col(value_col).alias("v"),
-    ).agg(F.count("*").alias("cnt"))
+    return partials.base(partials.HIST, df, tier, key_cols, ts_col, value_col=value_col)
 
 
-def hist_cascade(
-    finer: DataFrame, tier: str, key_cols: tuple[str, ...] = ("source",)
-) -> DataFrame:
+def hist_cascade(finer: DataFrame, tier: str, key_cols: tuple[str, ...] = ("source",)) -> DataFrame:
     """Finer-tier histogram partials → coarser tier (counts add)."""
-    unit = TIERS[tier]
-    return finer.groupBy(
-        *key_cols, F.date_trunc(unit, F.col("ts")).alias("ts"), "v"
-    ).agg(F.sum("cnt").alias("cnt"))
+    return partials.cascade(partials.HIST, finer, tier, key_cols)
 
 
 def hist_quantiles(

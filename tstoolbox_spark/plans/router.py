@@ -13,39 +13,24 @@ raw sequences: a 3-4 order-of-magnitude scan reduction at the
 The partial/final split is what makes this lossless: tier tables
 store composable partials, never finalized means
 (pipeline/rollup.py), so re-aggregation is exact at any coarser grid.
+The tier pick and the merge are ``pipeline.partials.route``; each
+function here binds one family spec to it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..operators.core import parse_freq
+from ..pipeline.partials import HIST, PHLL, ROLLUP, TIER_TABLE, route
 from ..tables import ParquetSnapshotCatalog
 
-TIER_SECONDS = {"1m": 60, "1h": 3600, "1d": 86400}
-#: coarsest first — prefer the smallest scan
-_PREFERENCE = ["1d", "1h", "1m"]
-
-
-def _pick_tier(catalog: ParquetSnapshotCatalog, want_seconds: int) -> str | None:
-    for tier in _PREFERENCE:
-        sec = TIER_SECONDS[tier]
-        if (
-            sec <= want_seconds
-            and want_seconds % sec == 0
-            and catalog.exists(f"tier_{tier}")
-        ):
-            return tier
-    return None
+#: fixed tiers' bucket seconds (a view of ``pipeline.partials.TIER_TABLE``)
+TIER_SECONDS = {name: t.seconds for name, t in TIER_TABLE.items() if t.seconds}
 
 
 def route_tier_query(
-    spark: SparkSession,
-    catalog: ParquetSnapshotCatalog,
-    freq: str,
-    key_cols: tuple[str, ...] = ("source",),
-    with_mean: bool = True,
+    spark: SparkSession, catalog: ParquetSnapshotCatalog, freq: str,
+    key_cols: tuple[str, ...] = ("source",), with_mean: bool = True,
 ) -> tuple[DataFrame, str]:
     """Downsample to ``freq`` from the coarsest sufficient tier.
 
@@ -54,52 +39,12 @@ def route_tier_query(
     seconds divide the target. Raises LookupError when no materialized
     tier can serve the query (caller falls back to raw rollup).
     """
-    unit, secs = parse_freq(freq)
-    if unit in ("month", "year"):
-        if not catalog.exists("tier_1d"):
-            raise LookupError("calendar rollup needs the 1d tier")
-        tier = "1d"
-        bucket = F.date_trunc(unit, F.col("ts")).alias("ts")
-    else:
-        tier = _pick_tier(catalog, secs)
-        if tier is None:
-            raise LookupError(f"no materialized tier divides {freq!r}")
-        bucket = F.timestamp_seconds(
-            F.floor(F.unix_timestamp("ts") / secs) * secs
-        ).alias("ts")
-    tdf = catalog.read(spark, f"tier_{tier}")
-    out = tdf.groupBy(*key_cols, bucket).agg(
-        F.sum("n_tok_sum").alias("n_tok_sum"),
-        F.sum("n_tok_count").alias("n_tok_count"),
-        F.min("n_tok_min").alias("n_tok_min"),
-        F.max("n_tok_max").alias("n_tok_max"),
-    )
-    if with_mean:
-        out = out.withColumn("n_tok_mean", F.col("n_tok_sum") / F.col("n_tok_count"))
-    return out, tier
-
-
-def _freq_bucket(freq: str):
-    """(bucket expression, human tier description) for a target
-    frequency — calendar units via date_trunc, fixed via exact
-    epoch-second flooring (the route_tier_query convention)."""
-    unit, secs = parse_freq(freq)
-    if unit in ("month", "year"):
-        return F.date_trunc(unit, F.col("ts")).alias("ts"), None
-    return (
-        F.timestamp_seconds(
-            F.floor(F.unix_timestamp("ts") / secs) * secs
-        ).alias("ts"),
-        secs,
-    )
+    return route(ROLLUP, spark, catalog, freq, key_cols, finalize=with_mean)
 
 
 def route_quantile_query(
-    spark: SparkSession,
-    catalog: ParquetSnapshotCatalog,
-    freq: str,
-    qs: tuple[float, ...] = (0.5, 0.9, 0.99),
-    key_cols: tuple[str, ...] = ("source",),
+    spark: SparkSession, catalog: ParquetSnapshotCatalog, freq: str,
+    qs: tuple[float, ...] = (0.5, 0.9, 0.99), key_cols: tuple[str, ...] = ("source",),
 ) -> tuple[DataFrame, str]:
     """EXACT quantiles at ``freq`` from the coarsest sufficient
     histogram tier (``hist_<tier>`` tables: keys, ts, v, cnt).
@@ -110,37 +55,11 @@ def route_quantile_query(
     |domain| rows per bucket instead of raw rows: the same 3-4
     order-of-magnitude reduction route_tier_query buys for means.
     """
-    from ..pipeline.rollup import hist_quantiles
-
-    bucket, secs = _freq_bucket(freq)
-    if secs is None:
-        if not catalog.exists("hist_1d"):
-            raise LookupError("calendar quantiles need the hist_1d tier")
-        tier = "1d"
-    else:
-        tier = next(
-            (
-                t
-                for t in _PREFERENCE
-                if TIER_SECONDS[t] <= secs
-                and secs % TIER_SECONDS[t] == 0
-                and catalog.exists(f"hist_{t}")
-            ),
-            None,
-        )
-        if tier is None:
-            raise LookupError(f"no materialized hist tier divides {freq!r}")
-    hist = catalog.read(spark, f"hist_{tier}")
-    merged = hist.groupBy(*key_cols, bucket, "v").agg(
-        F.sum("cnt").alias("cnt")
-    )
-    return hist_quantiles(merged, qs, key_cols=key_cols), tier
+    return route(HIST, spark, catalog, freq, key_cols, qs=qs)
 
 
 def route_distinct_query(
-    spark: SparkSession,
-    catalog: ParquetSnapshotCatalog,
-    freq: str,
+    spark: SparkSession, catalog: ParquetSnapshotCatalog, freq: str,
     key_cols: tuple[str, ...] = ("source",),
 ) -> tuple[DataFrame, str]:
     """Approximate distinct counts at ``freq`` from the coarsest
@@ -153,28 +72,4 @@ def route_distinct_query(
     register rows whatever the id cardinality — the sketch-tier
     answer to COUNT(DISTINCT) at the 10^12-sequence design point.
     """
-    from ..pipeline.hll import phll_estimate
-
-    bucket, secs = _freq_bucket(freq)
-    if secs is None:
-        if not catalog.exists("phll_1d"):
-            raise LookupError("calendar distinct needs the phll_1d tier")
-        tier = "1d"
-    else:
-        tier = next(
-            (
-                t
-                for t in _PREFERENCE
-                if TIER_SECONDS[t] <= secs
-                and secs % TIER_SECONDS[t] == 0
-                and catalog.exists(f"phll_{t}")
-            ),
-            None,
-        )
-        if tier is None:
-            raise LookupError(f"no materialized phll tier divides {freq!r}")
-    reg = catalog.read(spark, f"phll_{tier}")
-    merged = reg.groupBy(*key_cols, bucket, "idx").agg(
-        F.max("rho").alias("rho")
-    )
-    return phll_estimate(merged, key_cols=key_cols), tier
+    return route(PHLL, spark, catalog, freq, key_cols)

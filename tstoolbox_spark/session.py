@@ -34,11 +34,26 @@ def _parse_gb(mem: str) -> int:
         return 0
 
 
+def _physical_bytes() -> int | None:
+    try:
+        return os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (ValueError, OSError):
+        return None
+
+
+def default_driver_memory() -> str:
+    """Half of physical memory (at least 1g): a fixed default heap
+    cannot map on every host, and the other half is left for the
+    off-heap pool, the Python workers and the page cache."""
+    phys = _physical_bytes()
+    return f"{max(phys // (2 << 30), 1)}g" if phys else "2g"
+
+
 def get_spark(
     app_name: str = "tstoolbox_spark",
     parallelism: int | None = None,
     shuffle_partitions: int | None = None,
-    driver_memory: str = "48g",
+    driver_memory: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
@@ -53,26 +68,30 @@ def get_spark(
         Post-shuffle partition count; defaults to parallelism (local
         mode). Cluster jobs should pass ~2-3x total cores and let AQE
         coalesce.
+    driver_memory:
+        Driver heap; defaults to :func:`default_driver_memory`.
     """
     if parallelism is None:
         parallelism = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     if shuffle_partitions is None:
         shuffle_partitions = parallelism
 
-    # -Xms scaled from the requested heap (a hard-coded 8g floor fails
+    # -Xms scaled from a requested heap (a hard-coded 8g floor fails
     # JVM startup for any driver_memory < 8g: Xms > Xmx); pre-touching
     # half the heap keeps the ParallelGC young gen from growing in
-    # increments without constraining small test sessions.
-    heap_gb = _parse_gb(driver_memory)
-    xms = f"-Xms{max(heap_gb // 2, 1)}g" if heap_gb else ""
+    # increments without constraining small test sessions. The derived
+    # default keeps -Xms at 1g, so an entry point that never asked for
+    # a big heap does not commit half the host's memory up front.
+    if driver_memory is None:
+        driver_memory, xms = default_driver_memory(), "-Xms1g"
+    else:
+        heap_gb = _parse_gb(driver_memory)
+        xms = f"-Xms{max(heap_gb // 2, 1)}g" if heap_gb else ""
     # Off-heap Tungsten default: a quarter of physical memory, capped
     # at 16g (the measured sweet spot on the 128 GiB dev box) — not a
     # fixed 16g, which would over-commit smaller hosts.
-    try:
-        page_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
-        offheap_default = f"{max(min(page_bytes // (4 << 30), 16), 1)}g"
-    except (ValueError, OSError):
-        offheap_default = "2g"
+    phys = _physical_bytes()
+    offheap_default = f"{max(min(phys // (4 << 30), 16), 1)}g" if phys else "2g"
 
     builder = (
         SparkSession.builder.appName(app_name)

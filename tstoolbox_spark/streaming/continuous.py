@@ -19,6 +19,11 @@ Design (Spark-first):
   analog of the batch pipeline's snapshot/lineage resume).
 - ``trigger(availableNow=True)`` drains what exists then stops, which
   is also how the test drives it deterministically.
+
+Every twin below except ``continuous_ingest_dedup`` is a binding of a
+``pipeline.partials`` spec to ``partials.stream``: the streamed rows
+use exactly the batch family's aggregates, grouped by (window, keys…,
+inner…) and emitted as (ts, keys…, inner…, partials…).
 """
 
 from __future__ import annotations
@@ -26,20 +31,13 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..pipeline.partials import BLOOM, CMS, HIST, PHLL, ROLLUP, SEQ_SCHEMA, stream
 from ..timeaxis import with_time_axis
-
-SEQ_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 
 
 def continuous_rollup(
-    spark: SparkSession,
-    input_dir: str,
-    tier_dir: str,
-    checkpoint_dir: str,
-    tier: str = "1m",
-    watermark: str = "2 minutes",
-    key_cols: tuple[str, ...] = ("source",),
-    available_now: bool = True,
+    spark: SparkSession, input_dir: str, tier_dir: str, checkpoint_dir: str, tier: str = "1m",
+    watermark: str = "2 minutes", key_cols: tuple[str, ...] = ("source",),
 ):
     """Start the streaming 1m rollup; returns the StreamingQuery.
 
@@ -47,41 +45,12 @@ def continuous_rollup(
     (ts, keys, n_tok_sum/count/min/max partials), so
     ``rollup_cascade`` consumes it unchanged.
     """
-    unit = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}[tier]
-    stream = spark.readStream.schema(SEQ_SCHEMA).parquet(input_dir)
-    seq = with_time_axis(stream)
-    agg = (
-        seq.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", unit).alias("w"), *key_cols)
-        .agg(
-            F.sum("n_tok").alias("n_tok_sum"),
-            F.count("n_tok").alias("n_tok_count"),
-            F.min("n_tok").alias("n_tok_min"),
-            F.max("n_tok").alias("n_tok_max"),
-        )
-        .select(F.col("w.start").alias("ts"), *key_cols,
-                "n_tok_sum", "n_tok_count", "n_tok_min", "n_tok_max")
-    )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", tier_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return stream(ROLLUP, spark, input_dir, tier_dir, checkpoint_dir, tier, watermark, key_cols)
 
 
 def continuous_hist(
-    spark: SparkSession,
-    input_dir: str,
-    tier_dir: str,
-    checkpoint_dir: str,
-    tier: str = "1m",
-    watermark: str = "2 minutes",
-    key_cols: tuple[str, ...] = ("source",),
-    available_now: bool = True,
+    spark: SparkSession, input_dir: str, tier_dir: str, checkpoint_dir: str, tier: str = "1m",
+    watermark: str = "2 minutes", key_cols: tuple[str, ...] = ("source",),
 ):
     """Streaming value-count HISTOGRAM partials — the incremental-ingest
     mode of ``pipeline.rollup.hist_base``. Output schema
@@ -89,31 +58,8 @@ def continuous_hist(
     ``hist_quantiles``, so exact tier percentiles stay available while
     data streams in. State per open bucket is bounded by the value
     domain (|domain| counters), the same bound that makes the batch
-    partial composable; append mode + watermark emit a bucket's
-    histogram once it closes. Exactly-once via the file-sink
-    transaction log, resume via the checkpoint."""
-    unit = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}[tier]
-    stream = spark.readStream.schema(SEQ_SCHEMA).parquet(input_dir)
-    seq = with_time_axis(stream)
-    agg = (
-        seq.withWatermark("ts", watermark)
-        .groupBy(
-            F.window("ts", unit).alias("w"),
-            *key_cols,
-            F.col("n_tok").alias("v"),
-        )
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("ts"), *key_cols, "v", "cnt")
-    )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", tier_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    partial composable."""
+    return stream(HIST, spark, input_dir, tier_dir, checkpoint_dir, tier, watermark, key_cols)
 
 
 def continuous_ingest_dedup(
@@ -164,14 +110,8 @@ def continuous_ingest_dedup(
 
 
 def continuous_cascade(
-    spark: SparkSession,
-    finer_dir: str,
-    tier_dir: str,
-    checkpoint_dir: str,
-    tier: str = "1h",
-    watermark: str = "2 hours",
-    key_cols: tuple[str, ...] = ("source",),
-    available_now: bool = True,
+    spark: SparkSession, finer_dir: str, tier_dir: str, checkpoint_dir: str, tier: str = "1h",
+    watermark: str = "2 hours", key_cols: tuple[str, ...] = ("source",),
 ):
     """Materialize a coarser tier (1h/1d) FROM the streaming finer
     tier's parquet output — the streaming twin of
@@ -180,12 +120,11 @@ def continuous_cascade(
     The finer tier is itself an append-only stream of watermark-closed
     buckets (each (ts, key) cell emitted exactly once), so the coarse
     tier is just a second streaming window aggregation over those
-    partials: sum(sum)/sum(count)/min(min)/max(max) — the identical
-    partial-merge exprs as the batch cascade, hence bit-for-bit parity
-    on every emitted bucket. Each stage carries its own checkpoint, so
-    the whole 1m → 1h → 1d chain is independently resumable and
-    exactly-once end-to-end (file source offsets + file-sink
-    transaction log per stage).
+    partials with the batch cascade's merge aggregates, hence
+    bit-for-bit parity on every emitted bucket. Each stage carries its
+    own checkpoint, so the whole 1m → 1h → 1d chain is independently
+    resumable and exactly-once end-to-end (file source offsets +
+    file-sink transaction log per stage).
 
     The finer tier's static schema is read from ``finer_dir`` (the dir
     exists once the 1m stage has started); a coarse bucket emits when
@@ -193,43 +132,14 @@ def continuous_cascade(
     """
     if tier not in ("1h", "1d"):
         raise ValueError(f"cascade tier must be 1h or 1d, got {tier!r}")
-    unit = {"1h": "1 hour", "1d": "1 day"}[tier]
-    schema = spark.read.parquet(finer_dir).schema
-    stream = spark.readStream.schema(schema).parquet(finer_dir)
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", unit).alias("w"), *key_cols)
-        .agg(
-            F.sum("n_tok_sum").alias("n_tok_sum"),
-            F.sum("n_tok_count").alias("n_tok_count"),
-            F.min("n_tok_min").alias("n_tok_min"),
-            F.max("n_tok_max").alias("n_tok_max"),
-        )
-        .select(F.col("w.start").alias("ts"), *key_cols,
-                "n_tok_sum", "n_tok_count", "n_tok_min", "n_tok_max")
+    return stream(
+        ROLLUP, spark, finer_dir, tier_dir, checkpoint_dir, tier, watermark, key_cols, finer=True
     )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", tier_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def continuous_cms(
-    spark: SparkSession,
-    input_dir: str,
-    tier_dir: str,
-    checkpoint_dir: str,
-    tier: str = "1m",
-    key_col: str = "doc_id",
-    watermark: str = "2 minutes",
-    depth: int | None = None,
-    width: int | None = None,
-    available_now: bool = True,
+    spark: SparkSession, input_dir: str, tier_dir: str, checkpoint_dir: str, tier: str = "1m",
+    key_col: str = "doc_id", watermark: str = "2 minutes",
 ):
     """Streaming count-min-sketch partials — the incremental-ingest
     mode of ``pipeline.cms.cms_partials``: per closed tier bucket,
@@ -237,62 +147,14 @@ def continuous_cms(
     ids at 10^12-sequence scale). Output schema (ts, j, bucket, cnt)
     is consumed unchanged by ``cms_merge`` / ``cms_estimate``, so
     approximate heavy-hitter counts stay available while data streams
-    in.
-
-    State per open bucket is bounded by depth × width counters — the
-    same bound that makes the batch partial composable; append mode +
-    watermark emit a bucket's grid once it closes. Exactly-once via
-    the file-sink transaction log, resume via the checkpoint.
+    in. State per open bucket is bounded by depth × width counters.
     """
-    from ..pipeline.cms import CMS_DEPTH, CMS_WIDTH, cms_bucket
-
-    d = depth or CMS_DEPTH
-    w = width or CMS_WIDTH
-    unit = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}[tier]
-    stream = spark.readStream.schema(SEQ_SCHEMA).parquet(input_dir)
-    seq = with_time_axis(stream)
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("j"),
-                cms_bucket(F.col(key_col), j, w).alias("bucket"),
-            )
-            for j in range(d)
-        ]
-    )
-    rows = seq.select("ts", F.explode(pairs).alias("jb"))
-    agg = (
-        rows.withWatermark("ts", watermark)
-        .groupBy(
-            F.window("ts", unit).alias("w"),
-            F.col("jb.j").alias("j"),
-            F.col("jb.bucket").alias("bucket"),
-        )
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("ts"), "j", "bucket", "cnt")
-    )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", tier_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return stream(CMS, spark, input_dir, tier_dir, checkpoint_dir, tier, watermark, value_col=key_col)
 
 
 def continuous_bloom(
-    spark: SparkSession,
-    input_dir: str,
-    tier_dir: str,
-    checkpoint_dir: str,
-    tier: str = "1m",
-    key_col: str = "doc_id",
-    watermark: str = "2 minutes",
-    k: int | None = None,
-    words: int | None = None,
-    available_now: bool = True,
+    spark: SparkSession, input_dir: str, tier_dir: str, checkpoint_dir: str, tier: str = "1m",
+    key_col: str = "doc_id", watermark: str = "2 minutes",
 ):
     """Streaming Bloom-filter partials — the incremental-ingest mode
     of ``pipeline.bloom.bloom_build``: per closed tier bucket, the
@@ -300,46 +162,14 @@ def continuous_bloom(
     folds any set of buckets into one filter (bit_or), so "was this
     id ingested in range X" membership stays answerable while data
     streams in — the ingest-side half of eval-set decontamination.
-
-    State per open bucket is bounded by the word-table size;
-    exactly-once via the file-sink log, resume via the checkpoint.
+    State per open bucket is bounded by the word-table size.
     """
-    from ..pipeline.bloom import BLOOM_K, BLOOM_WORDS, _exploded_positions
-
-    kk = k or BLOOM_K
-    ww = words or BLOOM_WORDS
-    unit = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}[tier]
-    stream = spark.readStream.schema(SEQ_SCHEMA).parquet(input_dir)
-    seq = with_time_axis(stream)
-    rows = _exploded_positions(
-        seq.select("ts", key_col), key_col, kk, ww, carry_cols=("ts",)
-    )
-    agg = (
-        rows.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", unit).alias("w"), F.col("word"))
-        .agg(F.bit_or("mask").alias("mask"))
-        .select(F.col("w.start").alias("ts"), "word", "mask")
-    )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", tier_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return stream(BLOOM, spark, input_dir, tier_dir, checkpoint_dir, tier, watermark, value_col=key_col)
 
 
 def continuous_phll(
-    spark: SparkSession,
-    input_dir: str,
-    tier_dir: str,
-    checkpoint_dir: str,
-    tier: str = "1m",
-    key_col: str = "doc_id",
-    watermark: str = "2 minutes",
-    available_now: bool = True,
+    spark: SparkSession, input_dir: str, tier_dir: str, checkpoint_dir: str, tier: str = "1m",
+    key_col: str = "doc_id", watermark: str = "2 minutes",
 ):
     """Streaming portable-HLL register partials — the incremental-
     ingest mode of ``pipeline.hll.phll_partial``: per closed tier
@@ -348,30 +178,5 @@ def continuous_phll(
     (register-wise MAX, idempotent — safe under replay), so "distinct
     ids ingested in range X" stays answerable while data streams in,
     at ≤256 rows of state per open bucket whatever the id cardinality.
-
-    Exactly-once via the file-sink transaction log, resume via the
-    checkpoint — identical contract to the CMS/Bloom ingest twins.
     """
-    from ..pipeline.hll import phll_register_rows
-
-    unit = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}[tier]
-    stream = spark.readStream.schema(SEQ_SCHEMA).parquet(input_dir)
-    seq = with_time_axis(stream)
-    rows = phll_register_rows(
-        seq.select("ts", key_col), key_col, carry_cols=("ts",)
-    )
-    agg = (
-        rows.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", unit).alias("w"), F.col("idx"))
-        .agg(F.max("rho").alias("rho"))
-        .select(F.col("w.start").alias("ts"), "idx", "rho")
-    )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", tier_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return stream(PHLL, spark, input_dir, tier_dir, checkpoint_dir, tier, watermark, value_col=key_col)

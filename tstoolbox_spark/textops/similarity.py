@@ -20,6 +20,14 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+#: semdedup's Arrow gram path holds one dense n_cell² float64 matrix
+#: per cell in the Python worker: 20k rows = 3.2 GB. Beyond that the
+#: right fix is more centroids (the SemDeDup paper scales k with the
+#: corpus so cells stay bounded), or vectorized=False to stream pairs
+#: through the join at O(n) memory; the path refuses rather than OOM
+#: the executor.
+SEMDEDUP_MAX_CELL = 20_000
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -640,14 +648,25 @@ def ivfpq_topk_batch(
     At 10^12 vectors: one codes-only scan of nprobe_union/nlist of the
     files answers every query in the batch.
     """
+    from ..pipeline import incremental_dedup
+
     kk = len(codebooks[0])
     m = len(codebooks)
-    # materialize the probe table on the driver: it is BOUNDED
-    # (nqueries*nprobe rows x m*K doubles — ~32 MB for 1k queries at
-    # m=8, K=256, the size any broadcast side must fit anyway) and
-    # re-creating it as a local relation avoids both a leaked persist
-    # (no unpersist handle once the result frame is returned) and a
-    # second distributed pass for the distinct probed cells.
+    # materialize the probe table on the driver: it is bounded by
+    # nqueries*min(nprobe, nlist) rows x m*K doubles (~32 MB for 1k
+    # queries at m=8, K=256, the size any broadcast side must fit
+    # anyway) — and refused above the broadcast row limit, since the
+    # query count is the caller's. Re-creating it as a local relation
+    # avoids both a leaked persist (no unpersist handle once the
+    # result frame is returned) and a second distributed pass for the
+    # distinct probed cells.
+    n_probe_rows = queries.count() * min(nprobe, len(centroids))
+    if n_probe_rows > incremental_dedup.BROADCAST_ROW_LIMIT:
+        raise ValueError(
+            f"ivfpq_topk_batch: probe table has {n_probe_rows} rows "
+            f"(> {incremental_dedup.BROADCAST_ROW_LIMIT}); split the queries "
+            "into smaller batches"
+        )
     probe_pdf = ivfpq_probe_table(
         queries, centroids, codebooks, nprobe, query_vec_col, query_id_col
     ).toPandas()
@@ -751,13 +770,8 @@ def semdedup(
 
         id_type = df.schema[id_col].dataType.simpleString()
         thr = float(threshold)
-        # memory contract (theil_sen style, stats.py:255): one dense
-        # n_cell² float64 matrix lives in the Python worker. 20k rows
-        # = 3.2 GB; beyond that the right fix is more centroids (the
-        # SemDeDup paper scales k with the corpus so cells stay
-        # bounded), or vectorized=False to stream pairs through the
-        # join at O(n) memory. Refuse rather than OOM the executor.
-        max_cell = 20_000
+        # read at call time, so the bound travels with the closure
+        max_cell = SEMDEDUP_MAX_CELL
 
         def _dominate(key, pdf):
             n = len(pdf)
