@@ -1,8 +1,7 @@
 #!/usr/bin/env python
 """Engine-compute scaling control: the Gorilla bucket codec alone.
 
-The full-pipeline scaling protocols (scaling_evidence.py,
-cluster_scaling.py) measure Spark jobs whose kernel-heavy components
+Full-pipeline scaling runs measure Spark jobs whose kernel-heavy components
 (Arrow IPC sockets, shuffle IO, JVM memory management) serialize
 inside this Firecracker sandbox regardless of engine design. This
 control isolates what the engine itself contributes: the per-cell

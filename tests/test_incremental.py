@@ -230,3 +230,36 @@ def test_snapshot_diff_surfaces_changes(spark, seq, split, tmp_path):
     late_parts = rollup.rollup_base(late, "1m")
     n_late_buckets = late_parts.count()
     assert added <= n_late_buckets and removed <= n_late_buckets
+
+
+def test_refresh_keeps_the_tier_day_layout(spark, seq, split, tmp_path):
+    """A refreshed day is written like the pipeline writes it: in every
+    tier, each day's file, touched or carried, is ordered by
+    (source, ts), so its row-group stats still skip by source and
+    time."""
+    import pyarrow.parquet as pq
+
+    on_time, late, late_days = split
+    cat = ParquetSnapshotCatalog(str(tmp_path / "cat"))
+    base_1m = rollup.rollup_base(on_time, "1m")
+    tiers = {
+        "1m": base_1m,
+        "1h": rollup.rollup_cascade(base_1m, "1h"),
+        "1d": rollup.rollup_cascade(base_1m, "1d"),
+    }
+    for tier, df in tiers.items():
+        cat.write_snapshot(
+            rollup.day_layout(df), f"tier_{tier}", partition_by=["day"]
+        )
+    incremental.refresh_all_tiers(cat, spark, late)
+    for table in ("tier_1m", "tier_1h", "tier_1d"):
+        snap = cat.current_snapshot(table)
+        (new_days,) = [g["paths"] for g in snap["refs"] if g["basePath"] == snap["path"]]
+        assert len(new_days) == len(late_days), table
+        for day_dir in [p for g in snap["refs"] for p in g["paths"]]:
+            files = [f for f in os.listdir(day_dir) if f.endswith(".parquet")]
+            assert files, day_dir
+            for f in files:
+                t = pq.read_table(os.path.join(day_dir, f), columns=["source", "ts"])
+                keys = list(zip(t["source"].to_pylist(), t["ts"].to_pylist()))
+                assert keys == sorted(keys), (table, day_dir)

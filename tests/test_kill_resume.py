@@ -143,3 +143,69 @@ def test_kill_mid_tier_write_then_concurrent_commit_then_resume(
         )
         assert dup == 0
         assert cur_rows.count() > 0
+
+
+LOCK_CHILD = """
+import sys, time
+sys.path.insert(0, {repo!r})
+from tstoolbox_spark.tables import ParquetSnapshotCatalog
+
+ParquetSnapshotCatalog({root!r})._acquire_lock("t")
+print("LOCKED", flush=True)
+time.sleep(600)
+"""
+
+
+def test_commit_after_sigkill_inside_commit_lock(spark, tmp_path):
+    """A committer SIGKILLed while holding the commit lock leaves a
+    lease whose owner is gone: the next commit breaks it and lands in
+    seconds instead of timing out. A live holder is never broken."""
+    root = str(tmp_path / "cat")
+    child = subprocess.Popen(
+        [sys.executable, "-c", LOCK_CHILD.format(repo=REPO, root=root)],
+        stdout=subprocess.PIPE, text=True,
+    )
+    assert child.stdout.readline().strip() == "LOCKED"
+    cat = ParquetSnapshotCatalog(root)
+    with pytest.raises(TimeoutError):
+        cat._acquire_lock("t", timeout=0.5)  # holder alive: wait it out
+    os.kill(child.pid, signal.SIGKILL)
+    child.wait(timeout=60)
+
+    t0 = time.monotonic()
+    sid = cat.write_snapshot(spark.range(3), "t")
+    assert time.monotonic() - t0 < 10
+    assert cat.current_snapshot("t")["id"] == sid
+    assert cat.read(spark, "t").count() == 3
+
+
+COUNTER_CHILD = """
+import sys
+sys.path.insert(0, {repo!r})
+from tstoolbox_spark.tables import ParquetSnapshotCatalog
+
+cat = ParquetSnapshotCatalog({root!r})
+for _ in range({n}):
+    cat._acquire_lock("t")
+    try:
+        with open({path!r}) as f:
+            v = int(f.read())
+        with open({path!r}, "w") as f:
+            f.write(str(v + 1))
+    finally:
+        cat._release_lock("t")
+"""
+
+
+def test_commit_lock_excludes_concurrent_holders(tmp_path):
+    """More committing processes than cores, each doing read-modify-
+    write under the lease: a lost update means two holders at once."""
+    workers, n = 2 * (os.cpu_count() or 2), 25
+    counter = tmp_path / "counter"
+    counter.write_text("0")
+    script = COUNTER_CHILD.format(
+        repo=REPO, root=str(tmp_path / "cat"), n=n, path=str(counter)
+    )
+    procs = [subprocess.Popen([sys.executable, "-c", script]) for _ in range(workers)]
+    assert [p.wait(timeout=300) for p in procs] == [0] * workers
+    assert int(counter.read_text()) == workers * n

@@ -164,7 +164,9 @@ def test_retention_is_metadata_only(spark, seq, tmp_path):
     assert parquet_files() == files_before
     snap = cat.current_snapshot("tier_1m")
     assert snap["id"] == sid and snap["properties"]["metadata_only"]
-    assert all(p.startswith(before["path"]) for p in snap["paths"])
+    assert all(
+        p.startswith(before["path"]) for g in snap["refs"] for p in g["paths"]
+    )
     kept = cat.read(spark, "tier_1m")
     days = [str(r["day"]) for r in kept.select("day").distinct().collect()]
     assert min(days) >= "2024-01-21" and max(days) <= "2024-01-30"
@@ -181,9 +183,9 @@ def test_retention_is_metadata_only(spark, seq, tmp_path):
 
 def test_fully_ttld_snapshot_survives_expire(spark, seq, tmp_path):
     """ADVICE r2 tables.py:119: a fully-TTL'd metadata-only snapshot
-    (paths == []) reads through the owner basePath + cutoff filter, so
-    expiring the owner must keep the basePath readable (one partition
-    dir spared as a schema anchor) and the read stays correctly empty."""
+    (no refs left) reads as an empty frame from its recorded schema, so
+    expiring the owner reclaims every day directory and the read stays
+    correctly empty, with the columns and types it had before the drop."""
     work = str(tmp_path / "ret_all")
     run_pipeline(
         spark,
@@ -195,15 +197,17 @@ def test_fully_ttld_snapshot_survives_expire(spark, seq, tmp_path):
         now=dt.datetime(2024, 1, 31),
     )
     cat = ParquetSnapshotCatalog(work)
+    before = cat.read(spark, "tier_1m").dtypes
     cat.drop_partitions_before(spark, "tier_1m", "day", "2099-01-01")
     snap = cat.current_snapshot("tier_1m")
-    assert snap["paths"] == []
+    assert snap["refs"] == []
     assert cat.read(spark, "tier_1m").count() == 0
     assert cat.expire_snapshots("tier_1m", keep_last=1) == 1
     # the current snapshot must still be readable after its owner expired
     out = cat.read(spark, "tier_1m")
     assert out.count() == 0
-    assert len(out.schema.fields) > 1  # schema recovered from the anchor dir
+    assert len(out.schema.fields) > 1  # schema recovered from the manifest
+    assert out.dtypes == before
 
 
 def test_optimistic_concurrency_conflict(spark, tmp_path):

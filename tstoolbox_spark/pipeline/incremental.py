@@ -103,7 +103,7 @@ def refresh_tier_snapshot(
         tier,
         key_cols,
     )
-    out = rollup.day_partition(merged).repartition(F.col("day"))
+    out = rollup.day_layout(merged, key_cols)
     return catalog.overwrite_partitions(spark, out, table, "day", days)
 
 
@@ -126,7 +126,7 @@ def refresh_all_tiers(
     O(|late| + touched-day partials x 3), independent of history
     length. Returns {tier: new snapshot id}.
     """
-    tables = tables or {"1m": "tier_1m", "1h": "tier_1h", "1d": "tier_1d"}
+    tables = tables or {t: f"{partials.ROLLUP.prefix}{t}" for t in rollup.TIER_ORDER}
     late_parts = rollup.rollup_base(late_raw, "1m", key_cols)
     days = touched_days(late_parts)
     out: dict[str, str] = {}
@@ -145,7 +145,7 @@ def refresh_all_tiers(
             .drop("day")
         )
         merged = rollup.rollup_cascade(finer_df, coarser, key_cols)
-        redone = rollup.day_partition(merged).repartition(F.col("day"))
+        redone = rollup.day_layout(merged, key_cols)
         out[coarser] = catalog.overwrite_partitions(
             spark, redone, tables[coarser], "day", days
         )

@@ -14,6 +14,7 @@ import datetime as dt
 from pyspark.sql import SparkSession
 
 from ..tables import ParquetSnapshotCatalog
+from . import partials
 
 #: tier → days of history kept (defaults; jobs override)
 DEFAULT_TTL_DAYS = {"1m": 7, "1h": 90, "1d": 3650}
@@ -30,7 +31,7 @@ def apply_retention(
     ttl = {**DEFAULT_TTL_DAYS, **(ttl_days or {})}
     out: dict[str, str] = {}
     for tier, days in ttl.items():
-        table = f"tier_{tier}"
+        table = f"{partials.ROLLUP.prefix}{tier}"
         if not catalog.exists(table):
             continue
         cutoff = (now - dt.timedelta(days=days)).strftime("%Y-%m-%d")

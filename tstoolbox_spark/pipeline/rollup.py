@@ -34,7 +34,8 @@ from . import partials
 
 #: tier name → date_trunc unit (a view of ``partials.TIER_TABLE``)
 TIERS = {name: t.unit for name, t in partials.TIER_TABLE.items()}
-TIER_ORDER = ["1m", "1h", "1d"]
+#: the fixed-length tiers, finest first
+TIER_ORDER = [name for name, t in partials.TIER_TABLE.items() if t.seconds]
 
 PARTIAL_COLS = ["n_tok_sum", "n_tok_count", "n_tok_min", "n_tok_max"]
 
@@ -131,6 +132,29 @@ def day_partition(tier_df: DataFrame) -> DataFrame:
     """Add the day partition column tiers are stored under (TTL drops
     whole day partitions — metadata-only)."""
     return tier_df.withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
+
+
+def day_layout(
+    tier_df: DataFrame, key_cols: tuple[str, ...] = ("source",)
+) -> DataFrame:
+    """The one storage layout of a tier, for the pipeline's write and
+    the incremental refresh alike: :func:`day_partition`, then one
+    shuffle partition per day before partitionBy('day') — otherwise
+    every post-agg partition writes a sliver into every day directory
+    (days x shuffle.partitions small files: slow commits, slow scans,
+    and a metadata-only TTL drop would still list thousands of files).
+    A day of 1m partials is sources x 1440 rows, so one task per day is
+    the right grain at any SF. Rows are sorted by (key_cols, ts) within
+    the day, so parquet row-group min/max stats are disjoint per
+    (source, ts range) and point/range reads skip whole row groups. The
+    sort leads with ``day``: a partitioned write sorts each task by its
+    partition column unless the input already is, and that sort would
+    discard the (key_cols, ts) order."""
+    return (
+        day_partition(tier_df)
+        .repartition(F.col("day"))
+        .sortWithinPartitions("day", *key_cols, "ts")
+    )
 
 
 def hist_trimmed_mean(

@@ -127,34 +127,17 @@ def run_pipeline(
     # ---- tier cascade ---------------------------------------------------
     t_roll = time.time()
 
-    def day_layout(tier_df: DataFrame) -> DataFrame:
-        # One shuffle partition per day before partitionBy('day'):
-        # otherwise every post-agg partition writes a sliver into every
-        # day directory (days x shuffle.partitions small files — slow
-        # commits, slow scans, and a metadata-only TTL drop would still
-        # list thousands of files). A day of 1m partials is sources x
-        # 1440 rows — one task per day is the right grain at any SF.
-        # sortWithinPartitions(source, ts): parquet row-group min/max
-        # stats become disjoint per (source, ts range), so point/range
-        # reads on a source or time slice skip whole row groups — free
-        # data-skipping at read time for one sort at write time.
-        return (
-            rollup.day_partition(tier_df)
-            .repartition(F.col("day"))
-            .sortWithinPartitions(*key_cols, "ts")
-        )
-
     tier_1m = rollup.rollup_base(cells, "1m", key_cols)
     snap_1m = catalog.write_snapshot(
-        day_layout(tier_1m), "tier_1m", partition_by=["day"]
+        rollup.day_layout(tier_1m, key_cols), "tier_1m", partition_by=["day"]
     )
     tier_1h = rollup.rollup_cascade(catalog.read(spark, "tier_1m"), "1h", key_cols)
     snap_1h = catalog.write_snapshot(
-        day_layout(tier_1h), "tier_1h", partition_by=["day"]
+        rollup.day_layout(tier_1h, key_cols), "tier_1h", partition_by=["day"]
     )
     tier_1d = rollup.rollup_cascade(catalog.read(spark, "tier_1h"), "1d", key_cols)
     snap_1d = catalog.write_snapshot(
-        day_layout(tier_1d), "tier_1d", partition_by=["day"]
+        rollup.day_layout(tier_1d, key_cols), "tier_1d", partition_by=["day"]
     )
     tier_lineage = None
     for tier, snap in [("1m", snap_1m), ("1h", snap_1h), ("1d", snap_1d)]:
