@@ -1,17 +1,23 @@
 #!/usr/bin/env python
 """Benchmark harness (driver contract).
 
-Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and the rollup
-pipeline throughput job, printing ONE JSON line::
+Runs the rollup pipeline throughput job and the headline queries at
+``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 test data) on a session
+sized from the host (``$SPARK_GRAFT_CPUS`` or every core), printing
+ONE JSON line::
 
     {"metric": "rollup throughput", "value": <seq/s>, "unit": "seq/s",
      "queries": {"agg_hourly": sec, ...}, "sf": 0.1, ...}
 
 The pipeline job (generate → salt → Gorilla-compress → tier cascade)
-is the metric BASELINE.md targets (sequences/sec); the per-query
+is the metric BASELINE.md targets (sequences/sec). It runs exactly
+``PIPELINE_RUNS`` times: ``value`` is the median seq/s,
+``pipeline_seconds`` the median wall time and ``pipeline_cpu_s`` the
+median process-tree CPU per run (this process, the JVM and its Python
+workers); ``pipeline_runs_seq_s`` lists every run. The per-query
 timings cover the operator library. Set ``SPARK_GRAFT_BENCH_ROWS`` to
-scale the pipeline input (default 1,000,000 sequences).
+scale the pipeline input (default 1,000,000 sequences). The layered
+benchmark of the same job is ``perfbench``.
 """
 
 from __future__ import annotations
@@ -19,6 +25,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -26,9 +33,13 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from perfbench.probes import tree_cpu_s  # noqa: E402
 from tstoolbox_spark.datagen import generate_sequences  # noqa: E402
 from tstoolbox_spark.pipeline.runner import run_pipeline  # noqa: E402
 from tstoolbox_spark.session import get_spark  # noqa: E402
+
+#: pipeline runs per bench; the headline is their median
+PIPELINE_RUNS = 3
 
 #: queries timed per round (a representative slice: scans, shuffles,
 #: windows, pivots — heaviest first so regressions surface loudly)
@@ -137,50 +148,35 @@ def force(df) -> int:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     rows = int(os.environ.get("SPARK_GRAFT_BENCH_ROWS", "1000000"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else None
 
-    spark = get_spark("bench", parallelism=cpus)
+    spark = get_spark("bench")
 
     # pipeline throughput FIRST: the BASELINE.md metric, measured in a
     # fresh JVM before the query sweep dirties heap/shuffle state (the
     # ordering is worth ~2x on the measured seq/s). Input is
     # pre-materialized parquet (generation is not pipeline work — the
-    # production input is an existing table). The shared host swings
-    # 3-4x between minutes (BENCH/BASELINE.md), so the pipeline runs
-    # twice and the better window is the headline; both are reported.
+    # production input is an existing table).
     work = tempfile.mkdtemp(prefix="bench_rollup_")
     try:
         inp = os.path.join(work, "input")
         generate_sequences(spark, rows).write.mode("overwrite").parquet(inp)
         seq = spark.read.parquet(inp)
-        attempts = []
-        # up to 5 attempts, stopping early once a run lands in a clean
-        # host window (>= 45k seq/s is the known-good regime on this
-        # box; the swings are 7x within minutes, so extra rolls are
-        # cheap insurance for the recorded headline — and when every
-        # attempt is far below the known-good regime the host is
-        # degraded for the whole window, so two more rolls either
-        # catch the recovery or document the degradation)
-        for i in range(5):
-            t0 = time.time()
+        runs = []
+        for i in range(PIPELINE_RUNS):
+            cpu0, t0 = tree_cpu_s(os.getpid()), time.time()
             m = run_pipeline(
                 spark, seq, os.path.join(work, f"tables{i}"), n_buckets=64,
                 target_rows_per_cell=250_000, verify=True,
             )
             m["wall"] = time.time() - t0
-            attempts.append(m)
-            best = max(a["sequences_per_second"] for a in attempts)
-            if i >= 1 and best >= 45_000:
-                break
-            if i >= 2 and best >= 25_000:
-                break
-        metrics = max(attempts, key=lambda m: m["sequences_per_second"])
-        pipeline_s = metrics["wall"]
-        pipeline_runs = [round(m["sequences_per_second"], 1) for m in attempts]
+            m["cpu"] = tree_cpu_s(os.getpid()) - cpu0
+            runs.append(m)
     finally:
         shutil.rmtree(work, ignore_errors=True)
+    # the median run supplies the headline and its phases
+    metrics = sorted(runs, key=lambda m: m["sequences_per_second"])[len(runs) // 2]
 
     # settle before the query sweep: drop pipeline heap garbage so the
     # first timed queries don't pay its GC debt (observed 6.9s vs 0.5s
@@ -190,12 +186,7 @@ def main() -> None:
 
     qs = entrymod.queries()
     timings: dict[str, float] = {}
-    # pipeline-only mode (SPARK_GRAFT_BENCH_SKIP_QUERIES=1): ~1/3 the
-    # wall time, so an opportunistic quiet-window run (scripts/
-    # quiet_bench.py) fits inside host windows the full sweep outlives.
-    # The driver-contract invocation sets no env and is unchanged.
-    only_pipeline = bool(os.environ.get("SPARK_GRAFT_BENCH_SKIP_QUERIES"))
-    for name in BENCH_QUERIES if not only_pipeline else []:
+    for name in BENCH_QUERIES:
         df = qs[name](spark, sf_dir)
         df.count()  # warm: plan + scan caches
         best = None
@@ -213,12 +204,13 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
         "pipeline_rows": rows,
-        "pipeline_seconds": round(pipeline_s, 2),
-        "pipeline_runs_seq_s": pipeline_runs,
-        "pipeline_phases": {k: v for k, v in metrics.get("phases", {}).items()},
+        "pipeline_seconds": round(statistics.median(m["wall"] for m in runs), 2),
+        "pipeline_cpu_s": round(statistics.median(m["cpu"] for m in runs), 2),
+        "pipeline_runs_seq_s": [round(m["sequences_per_second"], 1) for m in runs],
+        "pipeline_phases": dict(metrics.get("phases", {})),
         "compression_ratio": round(metrics["compression_ratio"], 3),
         "roundtrip_mismatched": metrics.get("roundtrip", {}).get("mismatched"),
-        "cpus": cpus,
+        "cpus": spark.sparkContext.defaultParallelism,
     }
     print(json.dumps(out))
 

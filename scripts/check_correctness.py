@@ -47,7 +47,7 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark("correctness", parallelism=8, driver_memory="16g")
+    spark = get_spark("correctness")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

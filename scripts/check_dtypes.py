@@ -32,7 +32,7 @@ TABLES = [
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = get_spark("dtypes", parallelism=8, driver_memory="16g")
+    spark = get_spark("dtypes")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

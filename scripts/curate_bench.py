@@ -1,11 +1,17 @@
 #!/usr/bin/env python
-"""Probe-gated bench for the composed curation funnel (VERDICT r4
-next-round #7): one `curate_corpus` run over the sf documents table
-with per-stage wall times, a crash-mid-funnel resume timing, and a
-fully-committed re-run timing — the same evidence discipline as the
-rollup pipeline's gated rolls.
+"""Bench for the composed curation funnel: one `curate_corpus` run
+over the sf documents table (or a synthetic corpus) with per-stage
+wall times, a crash-mid-funnel resume timing, and a fully-committed
+re-run timing.
 
-Usage: python scripts/curate_bench.py [--min-gbps G] [--sf-dir D]
+Kept beside ``perfbench`` because it is the only measurement of the
+curation funnel's throughput (docs/s), a secondary line next to the
+rollup headline. The memcpy probe is recorded before and after the
+run, the way perfbench records it: to explain outliers, never gated.
+The session is sized from the host (``$SPARK_GRAFT_CPUS`` or every
+core, half of RAM for the heap).
+
+Usage: python scripts/curate_bench.py [--sf-dir D] [--synth-docs N]
 Appends one JSON line to BENCH/quiet_runs.jsonl tagged
 kind=curate_bench.
 """
@@ -24,13 +30,11 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from quiet_bench import probe_gbps  # noqa: E402
+from perfbench.probes import memcpy_gbps  # noqa: E402
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--min-gbps", type=float, default=7.0)
-    ap.add_argument("--max-wait-min", type=float, default=30.0)
     ap.add_argument("--sf-dir", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--crash-after", type=int, default=4,
@@ -42,17 +46,7 @@ def main() -> int:
                          "the funnel's own scale ladder")
     args = ap.parse_args()
 
-    deadline = time.time() + args.max_wait_min * 60
-    while True:
-        g = probe_gbps()
-        print(f"probe: {g:.1f} GB/s (need {args.min_gbps})", flush=True)
-        if g >= args.min_gbps:
-            break
-        if time.time() > deadline:
-            print("no quiet window within the wait budget", flush=True)
-            return 3
-        time.sleep(60)
-    before = g
+    before = memcpy_gbps()
 
     from pyspark.sql import functions as F
 
@@ -61,11 +55,10 @@ def main() -> int:
     from tstoolbox_spark.session import get_spark
     from tstoolbox_spark.tables import ParquetSnapshotCatalog
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark("curate_bench", parallelism=cpus)
+    spark = get_spark("curate_bench")
     work = tempfile.mkdtemp(prefix="curate_bench_")
     if args.synth_docs:
-        from incremental_dedup_scale import synth_docs
+        from incremental_fold_ladder import synth_docs
 
         raw = synth_docs(spark, args.synth_docs).withColumn(
             "source",
@@ -101,14 +94,15 @@ def main() -> int:
     rec: dict = {"kind": "curate_bench",
                  "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
                  "sf_dir": ("synthetic" if args.synth_docs else args.sf_dir),
-                 "cpus": cpus, "n_docs": n_docs,
-                 "probe_before_gbps": round(before, 2)}
+                 "cpus": spark.sparkContext.defaultParallelism,
+                 "n_docs": n_docs, "memcpy_GBps_before": round(before, 2)}
     try:
         # ---- cold full run --------------------------------------------
         cat = ParquetSnapshotCatalog(os.path.join(work, "cold"))
         t0 = time.time()
         report = curate_corpus(spark, docs, cat, spec, eval_df=eval_df)
         rec["cold_total_s"] = round(time.time() - t0, 2)
+        rec["cold_docs_per_s"] = round(n_docs / rec["cold_total_s"], 1)
         rec["stages"] = {k: v for k, v in report.items()}
 
         # ---- crash after N stage commits, then resume -----------------
@@ -148,7 +142,7 @@ def main() -> int:
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
-    rec["probe_after_gbps"] = round(probe_gbps(), 2)
+    rec["memcpy_GBps_after"] = round(memcpy_gbps(), 2)
     out = os.path.join(REPO, "BENCH", "quiet_runs.jsonl")
     with open(out, "a") as f:
         f.write(json.dumps(rec) + "\n")

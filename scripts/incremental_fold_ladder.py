@@ -1,10 +1,10 @@
 #!/usr/bin/env python
-"""O(batch) evidence for the incremental near-dup fold (VERDICT r4
-next-round #8): fold a FIXED-size batch onto committed corpora of
-growing size and record fold-vs-rebuild time at each rung.
+"""O(batch) evidence for the incremental near-dup fold: fold a
+FIXED-size batch onto committed corpora of growing size and record
+fold-vs-rebuild time at each rung.
 
-Differs from incremental_dedup_scale.py in two ways that make it the
-honest scale instrument:
+Kept beside ``perfbench`` because it is the only scale instrument for
+``pipeline/incremental_dedup``:
 
 - the batch size is CONSTANT across rungs (the module's claim is
   per-batch cost O(batch + candidates + affected clusters), so the
@@ -13,8 +13,11 @@ honest scale instrument:
 - the committed state is read back from catalog PARQUET, not carried
   as an in-session lineage chain, so the history band table streams
   from disk through the batch-side broadcast join exactly as a
-  production fold would (and none of the harness's cumulative
-  localCheckpoint cost is attributed to the fold).
+  production fold would.
+
+The corpus is synthetic and deterministic (:func:`synth_docs`, shared
+with ``curate_bench.py``). The session is sized from the host
+(``$SPARK_GRAFT_CPUS`` or every core, half of RAM for the heap).
 
 Usage: python scripts/incremental_fold_ladder.py [rungs] [batch]
   rungs: comma-separated committed-corpus sizes (default
@@ -34,11 +37,9 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from incremental_dedup_scale import synth_docs  # noqa: E402
 from tstoolbox_spark.pipeline.incremental_dedup import (  # noqa: E402
     BANDS_TABLE,
     CLUSTERS_TABLE,
@@ -50,11 +51,43 @@ from tstoolbox_spark.tables import ParquetSnapshotCatalog  # noqa: E402
 from tstoolbox_spark.textops.dedup import near_dup_clusters  # noqa: E402
 
 
+def synth_docs(spark, n: int, words_per_doc: int = 40):
+    """Deterministic corpus: hash-vocab words per doc; every 20th
+    doc is a near-dup of its predecessor (first word swapped)."""
+    base = spark.range(0, n)
+    words = F.transform(
+        F.sequence(F.lit(1), F.lit(words_per_doc)),
+        lambda i: F.concat(
+            F.lit("w"),
+            F.pmod(
+                F.xxhash64(
+                    # near-dups: doc 20k+1 copies doc 20k's word stream
+                    (F.col("id") - F.when(F.col("id") % 20 == 1, 1)
+                     .otherwise(0)).cast("string"),
+                    i,
+                ),
+                F.lit(50_000),
+            ).cast("string"),
+        ),
+    )
+    first = F.when(F.col("id") % 20 == 1, F.lit("changed")).otherwise(
+        F.element_at(words, 1)
+    )
+    text = F.concat_ws(
+        " ", F.array_union(F.array(first), F.slice(words, 2, words_per_doc - 1))
+    )
+    return base.select(
+        F.concat(F.lit("d"), F.lpad(F.col("id").cast("string"), 10, "0")
+                 ).alias("doc_id"),
+        text.alias("text"),
+    )
+
+
 def main() -> None:
     rungs = [int(x) for x in (sys.argv[1] if len(sys.argv) > 1
                               else "50000,100000,200000").split(",")]
     batch_n = int(sys.argv[2]) if len(sys.argv) > 2 else 10_000
-    spark = get_spark("fold_ladder", parallelism=16, driver_memory="24g")
+    spark = get_spark("fold_ladder")
     out_path = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "BENCH", "incremental_dedup_scale.jsonl")
 
@@ -96,6 +129,7 @@ def main() -> None:
             rec = {
                 "ts": time.time(), "kind": "fold_ladder",
                 "corpus": n_corpus, "batch": batch_n,
+                "cpus": spark.sparkContext.defaultParallelism,
                 "init_s": init_s, "fold_s": fold_s,
                 "rebuild_s": rebuild_s, "clusters_rows": n_clusters,
             }

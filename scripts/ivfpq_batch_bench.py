@@ -1,8 +1,12 @@
 #!/usr/bin/env python
-"""Batched-IVFADC evidence (VERDICT r4 next-round #6 'Done'
-criterion): a whole query batch resolves through ONE codes-only scan
-over a materialized cell-partitioned index — no per-query driver
-jobs.
+"""Batched-IVFADC evidence: a whole query batch resolves through ONE
+codes-only scan over a materialized cell-partitioned index — no
+per-query driver jobs.
+
+Kept beside ``perfbench`` because it is the only measurement of
+batched IVFADC throughput (queries/s), a secondary line next to the
+rollup headline. The session is sized from the host
+(``$SPARK_GRAFT_CPUS`` or every core, half of RAM for the heap).
 
 Builds a synthetic corpus (sf embeddings tiled with deterministic
 jitter to ``--corpus`` vectors), trains nothing (centroids/codebooks
@@ -50,8 +54,7 @@ def main() -> int:
         ivfpq_topk_batch,
     )
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark("ivfpq_batch_bench", parallelism=cpus)
+    spark = get_spark("ivfpq_batch_bench")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     base = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     n_base = base.count()
@@ -116,7 +119,8 @@ def main() -> int:
             "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "corpus": args.corpus, "queries": args.queries,
             "nlist": args.nlist, "nprobe": args.nprobe, "k": args.k,
-            "cpus": cpus, "index_build_s": index_build_s,
+            "cpus": spark.sparkContext.defaultParallelism,
+            "index_build_s": index_build_s,
             "resolve_s": resolve_s, "rows_out": n_out,
             "codes_only_scan": codes_only,
             "queries_per_s": round(args.queries / resolve_s, 1),

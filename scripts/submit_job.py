@@ -8,12 +8,13 @@ Launch (cluster)::
         --input /data/sequences --work-dir /data/rollup \
         --buckets 4096 --target-rows-per-cell 250000
 
-Launch (local evidence runs for the N vs 4N scaling criterion)::
+Launch (local, generated input; the session defaults to every core)::
 
-    python scripts/submit_job.py --rows 2000000 --parallelism 8  --work-dir /tmp/w8
-    python scripts/submit_job.py --rows 2000000 --parallelism 32 --work-dir /tmp/w32
+    python scripts/submit_job.py --rows 1000000 --work-dir /tmp/rollup
 
-Prints one JSON metrics line (sequences/sec etc.) to stdout.
+Prints one JSON metrics line (sequences/sec etc.) to stdout. The
+benchmark of this job is ``perfbench`` (``batch_rollup``); this script
+only runs it.
 """
 
 from __future__ import annotations
@@ -43,8 +44,7 @@ def main() -> None:
 
     spark = get_spark("rollup_pipeline", parallelism=args.parallelism)
     if args.input:
-        # comma-separated paths = disjoint shards of one table (used by
-        # the multi-worker scaling protocol)
+        # comma-separated paths = disjoint shards of one table
         seq = spark.read.parquet(*args.input.split(","))
     else:
         seq = generate_sequences(spark, args.rows)

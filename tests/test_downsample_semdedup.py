@@ -191,6 +191,9 @@ def test_semdedup_vectorized_matches_join_path(spark):
     for i in range(60):
         v = base_vecs[i % 10] + (i // 10) * 1e-3
         rows.append((i, [float(x) for x in v]))
+    # zero-norm vectors: no angle, so never a duplicate (ANSI must not
+    # raise DIVIDE_BY_ZERO on either path)
+    rows += [(60, [0.0] * 8), (61, [0.0] * 8)]
     emb = spark.createDataFrame(pd.DataFrame(rows, columns=["vec_id", "embedding"]))
     cents = [[float(x) for x in base_vecs[i]] for i in range(3)]
     a = (semdedup(emb, cents, threshold=0.98, vectorized=True)
@@ -199,3 +202,5 @@ def test_semdedup_vectorized_matches_join_path(spark):
          .toPandas().sort_values("vec_id").reset_index(drop=True))
     pd.testing.assert_frame_equal(a, b)
     assert (~a["kept"]).sum() > 0  # the planted dups actually dropped
+    zero = a[a["vec_id"] >= 60]
+    assert zero["kept"].all() and zero["cent_cos"].isna().all()

@@ -1,6 +1,7 @@
 """Catalog snapshot shape: manifests written before ``refs`` existed
 still read, time-travel, take partition edits and expire; and a table
-emptied by a TTL drop reads back with the columns and types it had."""
+emptied by a TTL drop or a partition overwrite reads back with the
+columns and types it had."""
 
 from __future__ import annotations
 
@@ -51,6 +52,21 @@ def test_overwrite_then_drop_all_keeps_read_dtypes(spark, tmp_path):
     before = cat.read(spark, "t").dtypes
     assert before == [("v", "double"), ("day", "date")]
     cat.drop_partitions_before(spark, "t", "day", "2099-01-01")
+    out = cat.read(spark, "t")
+    assert out.count() == 0
+    assert out.dtypes == before
+
+
+def test_overwrite_to_empty_keeps_read_dtypes(spark, tmp_path):
+    cat = ParquetSnapshotCatalog(str(tmp_path / "cat"))
+    df = spark.createDataFrame(
+        [("2024-01-01", 1.0), ("2024-01-01", 2.0)], "day string, v double"
+    )
+    cat.write_snapshot(df, "t", partition_by=["day"])
+    before = cat.read(spark, "t").dtypes
+    assert before == [("v", "double"), ("day", "date")]
+    cat.overwrite_partitions(spark, df.limit(0), "t", "day", ["2024-01-01"])
+    assert cat.current_snapshot("t")["refs"] == []
     out = cat.read(spark, "t")
     assert out.count() == 0
     assert out.dtypes == before

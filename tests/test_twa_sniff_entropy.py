@@ -210,13 +210,17 @@ def test_byte_stats_vectorized_matches_explode_path(spark):
         ("c", b"\xff" * 100),
         ("empty", b""),
         ("null", None),
+        # a repeated id: one output row per input row on both paths
+        ("b", b"\x00\x00"),
     ]
     df = spark.createDataFrame(rows, sch)
     vec = byte_stats(df, vectorized=True)
-    a = vec.toPandas().sort_values("asset_id").reset_index(drop=True)
+    key = ["asset_id", "n_bytes"]
+    a = vec.toPandas().sort_values(key).reset_index(drop=True)
     b = (byte_stats(df, vectorized=False)
-         .toPandas().sort_values("asset_id").reset_index(drop=True))
+         .toPandas().sort_values(key).reset_index(drop=True))
     pd.testing.assert_frame_equal(a, b)
     assert set(a["asset_id"]) == {"a", "b", "c"}
+    assert len(a) == 4
     plan = vec._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan

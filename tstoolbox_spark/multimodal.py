@@ -190,8 +190,10 @@ def byte_stats(
     BIGINT; divide by 1e6 for the float value.
 
     Output: (id_col, n_bytes, distinct_bytes, entropy_q6,
-    printable_ratio, nul_ratio). Assets with NULL/empty payloads are
-    absent from the output on both paths.
+    printable_ratio, nul_ratio), one row per input row with a
+    non-empty payload: rows that repeat an ``id_col`` value are not
+    merged. Rows with NULL/empty payloads are absent from the output
+    on both paths.
     """
     if vectorized:
         id_type = df.schema[id_col].dataType.simpleString()
@@ -274,14 +276,15 @@ def byte_stats(
             ),
         ).otherwise(F.array().cast("array<int>")),
     )
+    # group by a per-row key, not the id: one output row per input row
     ex = df.select(
-        F.col(id_col).alias("aid"), F.explode(bytes_arr).alias("b")
-    )
-    per_byte = ex.groupBy("aid", "b").agg(F.count(F.lit(1)).alias("c"))
-    tot = per_byte.groupBy("aid").agg(F.sum("c").alias("n"))
-    j = per_byte.join(F.broadcast(tot), "aid")
+        F.monotonically_increasing_id().alias("row"),
+        F.col(id_col).alias("aid"), F.length(payload_col).cast("long").alias("n"),
+        bytes_arr.alias("bytes"),
+    ).select("row", "aid", "n", F.explode("bytes").alias("b"))
+    per_byte = ex.groupBy("row", "aid", "n", "b").agg(F.count(F.lit(1)).alias("c"))
     p = F.col("c").cast("double") / F.col("n")
-    stats = j.groupBy("aid").agg(
+    stats = per_byte.groupBy("row", "aid").agg(
         F.max("n").alias("n_bytes"),
         F.count(F.lit(1)).alias("distinct_bytes"),
         F.sum(

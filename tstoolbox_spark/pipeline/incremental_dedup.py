@@ -127,8 +127,10 @@ def _batch_candidates(
     history scan, so the committed band table — O(corpus) rows —
     STREAMS through a BroadcastHashJoin and never shuffles. Without
     it the fold pays an O(corpus) band-table shuffle per batch, which
-    is the difference between O(batch) and O(corpus) fold cost at
-    10^12 docs (measured: scripts/incremental_fold_ladder.py)."""
+    is the difference between O(batch) and O(corpus) fold cost.
+    ``scripts/incremental_fold_ladder.py`` measures that curve: a fixed
+    batch folded onto committed corpora of growing size (50k-200k docs
+    by default), against a full rebuild."""
     nb_hint = F.broadcast(new_bands) if broadcast_new else new_bands
     a, b = nb_hint.alias("a"), new_bands.alias("b")
     nn = (

@@ -436,6 +436,13 @@ class ParquetSnapshotCatalog:
         self._swap([(table, snap, cur["id"])])
         return snap["id"]
 
+    def _kept_schema(self, spark: SparkSession, table: str, refs: list[dict], schema: dict) -> dict:
+        """``schema`` while ``refs`` keeps a group. When a partition
+        edit leaves none, the current read schema instead (one footer
+        read), so the empty table reads back with the columns and types
+        it had, partition columns typed as read."""
+        return schema if refs else json.loads(self.read(spark, table).schema.json())
+
     def overwrite_partitions(
         self,
         spark: SparkSession,
@@ -452,7 +459,8 @@ class ParquetSnapshotCatalog:
 
         ``df`` is filtered to ``partitions`` defensively, written to a
         new snap dir partitioned by ``partition_col``, and the new
-        snapshot's ``refs`` are the kept groups plus the new dir's.
+        snapshot's ``refs`` are the kept groups plus the new dir's
+        (with no group left, the schema rule of :meth:`_kept_schema`).
         Data lands before the metadata swap; the commit is validated
         against the base snapshot (optimistic concurrency), and a
         losing writer's data dir is cleaned up. Returns the new
@@ -480,6 +488,7 @@ class ParquetSnapshotCatalog:
         ) + _filter_groups(
             [{"basePath": data_dir, "paths": None}], partition_col, lambda v: True
         )
+        snap["schema"] = self._kept_schema(spark, table, snap["refs"], snap["schema"])
         self._swap([(table, snap, cur["id"])])
         return snap["id"]
 
@@ -497,15 +506,14 @@ class ParquetSnapshotCatalog:
         100 TB the nightly TTL pass costs one directory listing. Values
         are compared as their encoded directory strings, which is
         order-correct for ISO dates. When nothing is retained, the
-        record keeps the current read schema (one footer read), so the
-        empty table reads back with the columns and types it had.
+        record keeps the current read schema (:meth:`_kept_schema`).
         Returns the new snapshot id.
         """
         cur = self._current(table, partition_col)
         refs = _filter_groups(cur["refs"], partition_col, lambda v: v >= cutoff)
-        schema = cur["schema"] if refs else json.loads(self.read(spark, table).schema.json())
         return self._commit_child(
-            table, cur, refs=refs, schema=schema,
+            table, cur, refs=refs,
+            schema=self._kept_schema(spark, table, refs, cur["schema"]),
             properties={"retention_cutoff": cutoff, "metadata_only": True},
         )
 

@@ -42,7 +42,9 @@ def _norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
+    """Cosine similarity; null when either vector has zero norm (the
+    angle is undefined, and ANSI division by zero would fail the job)."""
+    return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
 
 
 def cosine_topk(
@@ -723,7 +725,9 @@ def semdedup(
     shuffles each vector once on its cell id, and the dominated-id
     set is a distinct over join output. No crossJoin anywhere.
 
-    Returns one row per input id: (id, cell, cent_cos, kept).
+    Returns one row per input id: (id, cell, cent_cos, kept). A
+    zero-norm vector has no angle: its cosines are null, so it is never
+    a duplicate and is always kept, with a null ``cent_cos``.
 
     ``cells``: optional pre-materialized (id, cell) assignments — pass
     the committed output of :func:`assign_cells` (e.g. through
@@ -798,9 +802,12 @@ def semdedup(
             # cosine in place, one row at a time: G[i,j] /= nn[i]*nn[j]
             # — same per-entry (na*nb then divide) arithmetic as the
             # JVM pair expression, without materializing a second n²
-            # matrix for the denominator
-            for i in range(n):
-                G[i, :] /= nn[i] * nn
+            # matrix for the denominator. A zero-norm row divides 0/0
+            # to NaN, which never passes the threshold (the join path's
+            # null cosine)
+            with np.errstate(invalid="ignore"):
+                for i in range(n):
+                    G[i, :] /= nn[i] * nn
             # row-wise upper-triangle scan: triu_indices would
             # materialize n(n-1)/2 index pairs (3.2 GB at the 20k
             # bound) — this keeps extra memory at O(hits)
@@ -838,7 +845,7 @@ def semdedup(
             )
         )
 
-    pair_cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+    pair_cos = F.try_divide(_dot(F.col("va"), F.col("vb")), F.col("na") * F.col("nb"))
     loser = F.when(
         (F.col("cc_a") > F.col("cc_b"))
         | ((F.col("cc_a") == F.col("cc_b")) & (F.col("id_a") > F.col("id_b"))),
