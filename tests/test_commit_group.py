@@ -64,8 +64,8 @@ def test_recover_pending_rolls_group_forward(spark, tmp_path):
     cat = ParquetSnapshotCatalog(str(tmp_path / "cat"))
     cat.write_snapshot(_df(spark, 1), "a")
     cat.write_snapshot(_df(spark, 1), "b")
-    snap_a = cat._prepare_snapshot(_df(spark, 7), "a")
-    snap_b = cat._prepare_snapshot(_df(spark, 8), "b")
+    snap_a = cat.stage(_df(spark, 7), "a")
+    snap_b = cat.stage(_df(spark, 8), "b")
     intent = os.path.join(cat.root, ".pending-group-test.json")
     with open(intent, "w") as f:
         json.dump(

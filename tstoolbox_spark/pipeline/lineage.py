@@ -6,21 +6,22 @@ per-partition lineage and metrics rows."
 Every pipeline stage writes, together with its data snapshot, a
 lineage table whose rows are the stage's work units:
 
-    stage    'compress' | 'tier_1m' | 'tier_1h' | 'tier_1d'
     unit     '<source>/<bucket>/<salt>' (compress) or '<source>/<day>'
+    stage    'compress' | 'tier_1m' | 'tier_1h' | 'tier_1d'
     snapshot the data snapshot id this unit landed in
-    rows_in / rows_out / bytes_out   metrics
+    rows_out rows the unit wrote
 
 Resume contract: a restarted run lists pending units, anti-joins them
 against lineage rows of completed snapshots, and processes only the
 remainder; because data + lineage commit under the same snapshot swap
-(tables.write_snapshot is atomic), a unit is either fully present with
-its lineage row or absent — never double-counted.
+(one ``publish`` of a catalog commit group, runner.py), a unit is
+either fully present with its lineage row or absent — never
+double-counted.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import ParquetSnapshotCatalog
@@ -28,17 +29,30 @@ from ..tables import ParquetSnapshotCatalog
 LINEAGE_TABLE = "lineage"
 
 
+def unit_key(unit_cols: list[str]) -> Column:
+    """A row's work unit as its lineage string: the unit columns joined
+    by '/'."""
+    return F.concat_ws("/", *[F.col(c).cast("string") for c in unit_cols])
+
+
 def lineage_rows(
     df: DataFrame, stage: str, snapshot: str, unit_cols: list[str]
 ) -> DataFrame:
-    """Build lineage rows from a stage output: one row per work unit."""
-    unit = F.concat_ws("/", *[F.col(c).cast("string") for c in unit_cols])
-    return df.groupBy(unit.alias("unit")).agg(
+    """Build lineage rows from a stage output: one row per work unit.
+    Groups by the unit columns themselves and builds the unit string
+    after, so a frame already clustered by a subset of them (a tier
+    clustered by ``day``) is aggregated with no shuffle."""
+    rows_out = (
+        F.sum(F.coalesce(F.col("n_rows"), F.lit(1)))
+        if "n_rows" in df.columns
+        else F.count("*")
+    )
+    units = df.groupBy(*unit_cols).agg(rows_out.alias("rows_out"))
+    return units.select(
+        unit_key(unit_cols).alias("unit"),
         F.lit(stage).alias("stage"),
         F.lit(snapshot).alias("snapshot"),
-        F.sum(F.coalesce(F.col("n_rows"), F.lit(1))).alias("rows_out")
-        if "n_rows" in df.columns
-        else F.count("*").alias("rows_out"),
+        "rows_out",
     )
 
 
@@ -67,8 +81,9 @@ def completed_units(
     )
 
 
-def pending_units(all_units: DataFrame, done: DataFrame | None) -> DataFrame:
-    """Anti-join the stage's work-unit list against completed lineage."""
+def pending_rows(df: DataFrame, done: DataFrame | None, unit_cols: list[str]) -> DataFrame:
+    """The rows of ``df`` whose work unit no completed lineage row
+    lists (an anti-join on the unit string)."""
     if done is None:
-        return all_units
-    return all_units.join(done, "unit", "left_anti")
+        return df
+    return df.join(done, unit_key(unit_cols) == done["unit"], "left_anti")

@@ -1,45 +1,75 @@
 """End-to-end rollup + retention job.
 
     sequences (doc_id, tokens, n_tok, source)
-      → derive ts (timeaxis)                       [narrow]
-      → salted bucket + repartition                [shuffle 1]
-      → Gorilla-compress cells (applyInPandas)     [no shuffle]
-      → write compressed table + lineage           [snapshot commit]
-      → round-trip verify (decode → token equality)
-      → tier 1m from raw                           [shuffle 2]
-      → tier 1h from 1m, tier 1d from 1h           [tiny shuffles]
-      → write tiers (day-partitioned) + lineage    [snapshot commits]
+      → derive ts (timeaxis), salted bucket               [narrow]
+      → cache the cells, observing rows + source digest   [1 job]
+      → Gorilla-compress cells (applyInArrow), staged,    [shuffle 1]
+        observing cells, raw and encoded bytes
+      → stage the compress lineage rows
+      → verify: decode the STAGED blobs, observing the    [no shuffle]
+        round-trip digest; compare with the source's
+      → publish compressed + lineage                      [one commit group]
+      → tier 1m from the cells, clustered by day, cached  [shuffles 2, 3]
+      → tiers 1h and 1d from the cached 1m, with day      [no shuffle]
+        among the keys; tier lineage from the same frames
+      → publish the three tiers + lineage                 [one commit group]
       → TTL retention drops
+
+Each frame is computed once and each metric is taken from the action
+that already runs (``DataFrame.observe``); nothing this run wrote is
+read back by footer inference — staged files are read with the schema
+their record carries. Every snapshot is staged (data files landed,
+unreferenced) and published only after its check, Iceberg's
+data-files-first discipline: a round-trip mismatch deletes the staged
+directories and raises, and every table's ``current`` stays as it was.
 
 Designed to be launched via ``spark-submit --py-files <zip> -m`` on a
 cluster; scripts/submit_job.py is the entry. Resume: pass the same
-``--work-dir`` — completed compress cells are anti-joined away via
-lineage (lineage.pending_units) and tier writes are idempotent
+``--work-dir``. A commit group a crash left half-applied is rolled
+forward first (``recover_pending``); completed compress cells are
+anti-joined away via lineage (lineage.pending_rows), and the pending
+ones land as one new ``refs`` group beside the committed blobs, which
+are carried by reference, never rewritten. Tier writes are idempotent
 snapshot swaps.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import functools
+import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..tables import ParquetSnapshotCatalog
 from ..timeaxis import with_time_axis
 from . import bucketing, compress, lineage, retention, rollup
 
+#: the compress stage's work unit
+UNIT_COLS = ["source", "bucket", "salt"]
 
-def _read_compressed(catalog: ParquetSnapshotCatalog, spark: SparkSession) -> DataFrame:
-    """Read the compressed table, backfilling ``enc_bytes`` for
-    snapshots written before that column existed (schema migration:
-    enc_bytes == blob length, so F.length(blob) reconstructs it at the
-    cost of one scan of the legacy snapshot only)."""
-    comp = catalog.read(spark, "compressed")
-    if "enc_bytes" not in comp.columns:
-        comp = comp.withColumn("enc_bytes", F.length("blob").cast("long"))
-    return comp
+
+def _noop(df: DataFrame) -> None:
+    """Run a plan to completion without collecting it."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def _scan(spark: SparkSession, snap: dict) -> DataFrame:
+    """An unpartitioned snapshot this run staged, read with its recorded
+    schema: no footer inference, so no Spark job until an action."""
+    return spark.read.schema(StructType.fromJson(snap["schema"])).parquet(snap["path"])
+
+
+def _cascade(tier_1m: DataFrame, tier: str, key_cols: tuple[str, ...]) -> DataFrame:
+    """``tier`` from the cached, day-clustered 1m tier. ``day`` is among
+    the group keys, so the clustering satisfies the aggregate and the
+    partitioned write with no further Exchange; the columns and the
+    in-partition sort are those of ``rollup.day_layout``."""
+    out = rollup.rollup_cascade(tier_1m, tier, (*key_cols, "day"))
+    return out.sortWithinPartitions("day", *key_cols, "ts").select(*tier_1m.columns)
 
 
 def run_pipeline(
@@ -48,14 +78,20 @@ def run_pipeline(
     work_dir: str,
     n_buckets: int = bucketing.DEFAULT_BUCKETS,
     target_rows_per_cell: int = 250_000,
-    verify: bool | str = True,
+    verify: bool = True,
     ttl_days: dict[str, int] | None = None,
     now: dt.datetime | None = None,
     key_cols: tuple[str, ...] = ("source",),
 ) -> dict:
     """Run the full pipeline; returns a metrics dict (the bench harness
-    reads sequences/sec from it)."""
+    reads sequences/sec from it). With ``verify``, the decoded blobs'
+    digest must equal the cells' before ``compressed`` is published;
+    a mismatch raises AssertionError and publishes nothing."""
     catalog = ParquetSnapshotCatalog(work_dir)
+    catalog.recover_pending()
+    tables = ["compressed", lineage.LINEAGE_TABLE, *(f"tier_{t}" for t in rollup.TIER_ORDER)]
+    # what this run replaces; a commit fails if another writer moved it
+    base = {t: (catalog.current_snapshot(t) or {}).get("id") for t in tables}
     metrics: dict = {}
     phases: dict[str, float] = {}
     metrics["phases"] = phases
@@ -66,88 +102,119 @@ def run_pipeline(
         phases[name] = round(now_ - since[0], 2)
         since[0] = now_
 
+    published: dict[str, dict] = {}  # the snapshots this run committed
+
+    def publish(staged: dict[str, dict]) -> None:
+        catalog.publish([(t, s, base[t]) for t, s in staged.items()])
+        base.update({t: s["id"] for t, s in staged.items()})
+        published.update(staged)
+
+    def lineage_table(rows: DataFrame) -> DataFrame:
+        """The lineage table with ``rows`` appended, as one file."""
+        lin = lineage.LINEAGE_TABLE
+        if lin in published:
+            rows = _scan(spark, published[lin]).unionByName(rows)
+        elif base[lin]:
+            rows = catalog.read(spark, lin).unionByName(rows)
+        return rows.coalesce(1)
+
     tick = [t0]
-    seq = with_time_axis(sequences)
-    cells = bucketing.bucketed(seq, target_rows_per_cell, n_buckets)
+    cells = bucketing.bucketed(with_time_axis(sequences), target_rows_per_cell, n_buckets)
     cells.persist()
-    n_seq = cells.count()
-    metrics["sequences"] = n_seq
-    mark("scan_bucket_cache", tick)
+    tier_1m = None
+    try:
+        source = Observation()
+        _noop(cells.observe(source, *compress.digest()))  # fills the cache
+        want = source.get
+        metrics["sequences"] = n_seq = want["rows"]
+        mark("scan_bucket_cache", tick)
 
-    # ---- compress stage (resume-aware) --------------------------------
-    all_units = cells.select(
-        F.concat_ws(
-            "/", F.col("source"), F.col("bucket").cast("string"), F.col("salt").cast("string")
-        ).alias("unit")
-    ).distinct()
-    done = lineage.completed_units(catalog, spark, "compress")
-    pending = lineage.pending_units(all_units, done)
-    n_pending = pending.count()
-    metrics["cells_pending"] = n_pending
-    mark("resume_bookkeeping", tick)
-    if n_pending > 0:
-        todo = cells.join(
-            pending.withColumn("source", F.split("unit", "/")[0])
-            .withColumn("bucket", F.split("unit", "/")[1].cast("int"))
-            .withColumn("salt", F.split("unit", "/")[2].cast("int"))
-            .drop("unit"),
-            ["source", "bucket", "salt"],
-            "left_semi",
-        )
-        comp = compress.compress(todo)
-        if catalog.exists("compressed") and done is not None:
-            comp = _read_compressed(catalog, spark).unionByName(comp)
-        snap = catalog.write_snapshot(comp, "compressed", compression="uncompressed")
-        written = catalog.read(spark, "compressed")
-        lin = lineage.lineage_rows(written, "compress", snap, ["source", "bucket", "salt"])
-        lineage.append_lineage(catalog, spark, lin)
-        metrics["compress_snapshot"] = snap
-    mark("compress_write_lineage", tick)
+        # ---- compress stage (resume-aware) ----------------------------
+        done = lineage.completed_units(catalog, spark, "compress")
+        resume = done is not None and base["compressed"] is not None
+        committed = catalog.read(spark, "compressed") if resume else None
+        todo = lineage.pending_rows(cells, done, UNIT_COLS)
+        if done is not None:
+            metrics["cells_pending"] = todo.select(*UNIT_COLS).distinct().count()
+        mark("resume_bookkeeping", tick)
 
-    comp = _read_compressed(catalog, spark)
-    # int columns only — parquet column pruning keeps the blob payload
-    # on disk (F.length(blob) here would re-scan every encoded byte)
-    sizes = comp.agg(
-        F.sum("raw_bytes").alias("raw"), F.sum("enc_bytes").alias("enc")
-    ).collect()[0]
-    metrics["raw_bytes"] = sizes["raw"]
-    metrics["encoded_bytes"] = sizes["enc"]
-    metrics["compression_ratio"] = (sizes["raw"] or 1) / max(sizes["enc"] or 1, 1)
-    mark("size_stats", tick)
+        staged: dict[str, dict] = {}
+        raw = enc = 0
+        if done is None or metrics["cells_pending"]:
+            sizes = Observation()
+            comp = compress.compress(todo).observe(
+                sizes,
+                F.count(F.lit(1)).alias("cells"),
+                F.sum("raw_bytes").alias("raw"),
+                F.sum("enc_bytes").alias("enc"),
+            )
+            snap = catalog.stage(comp, "compressed", compression="uncompressed")
+            staged["compressed"] = snap
+            # one row per cell, read into one partition: no shuffle
+            blobs = _scan(spark, snap).coalesce(1)
+            lin = lineage.lineage_rows(blobs, "compress", snap["id"], UNIT_COLS)
+            staged[lineage.LINEAGE_TABLE] = catalog.stage(
+                lineage_table(lin), lineage.LINEAGE_TABLE)
+            if committed is not None:  # resume appends: committed blobs by reference
+                snap["refs"] = catalog.current_snapshot("compressed")["refs"] + snap["refs"]
+            new = sizes.get
+            metrics.setdefault("cells_pending", new["cells"])
+            raw, enc = new["raw"] or 0, new["enc"] or 0
+        mark("compress_write_lineage", tick)
 
-    # ---- round-trip verification (north-rule invariant) ---------------
-    if verify:
-        mode = verify if isinstance(verify, str) else "hash"
-        rt = compress.verify_roundtrip(cells, compress.decompress(comp), mode=mode)
-        metrics["roundtrip"] = rt
-        if rt["mismatched"]:
-            raise AssertionError(f"token round-trip mismatch: {rt}")
+        if committed is not None:
+            row = committed.agg(F.sum("raw_bytes"), F.sum("enc_bytes")).first()
+            raw, enc = raw + (row[0] or 0), enc + (row[1] or 0)
+        metrics["raw_bytes"] = raw
+        metrics["encoded_bytes"] = enc
+        metrics["compression_ratio"] = (raw or 1) / max(enc or 1, 1)
+        mark("size_stats", tick)
+
+        # ---- round-trip verification, then publish (north-rule invariant)
+        if verify:
+            parts = [_scan(spark, staged["compressed"])] if staged else []
+            if committed is not None:
+                parts.append(committed)
+            decoded = Observation()
+            blobs = functools.reduce(DataFrame.unionByName, parts)
+            _noop(compress.decompress(blobs).observe(decoded, *compress.digest()))
+            got = decoded.get
+            metrics["roundtrip"] = {"total": n_seq, "mismatched": 0 if got == want else -1}
+            if got != want:
+                for s in staged.values():
+                    shutil.rmtree(s["path"], ignore_errors=True)
+                raise AssertionError(
+                    f"token round-trip mismatch: source digest {want}, decoded {got}"
+                )
+        if staged:
+            publish(staged)
+            metrics["compress_snapshot"] = staged["compressed"]["id"]
         mark("verify", tick)
 
-    # ---- tier cascade ---------------------------------------------------
-    t_roll = time.time()
-
-    tier_1m = rollup.rollup_base(cells, "1m", key_cols)
-    snap_1m = catalog.write_snapshot(
-        rollup.day_layout(tier_1m, key_cols), "tier_1m", partition_by=["day"]
-    )
-    tier_1h = rollup.rollup_cascade(catalog.read(spark, "tier_1m"), "1h", key_cols)
-    snap_1h = catalog.write_snapshot(
-        rollup.day_layout(tier_1h, key_cols), "tier_1h", partition_by=["day"]
-    )
-    tier_1d = rollup.rollup_cascade(catalog.read(spark, "tier_1h"), "1d", key_cols)
-    snap_1d = catalog.write_snapshot(
-        rollup.day_layout(tier_1d, key_cols), "tier_1d", partition_by=["day"]
-    )
-    tier_lineage = None
-    for tier, snap in [("1m", snap_1m), ("1h", snap_1h), ("1d", snap_1d)]:
-        tdf = catalog.read(spark, f"tier_{tier}")
-        lin = lineage.lineage_rows(tdf, f"tier_{tier}", snap, list(key_cols) + ["day"])
-        tier_lineage = lin if tier_lineage is None else tier_lineage.unionByName(lin)
-    lineage.append_lineage(catalog, spark, tier_lineage)
-    mark("tiers_write_lineage", tick)
-    metrics["tier_snapshots"] = {"1m": snap_1m, "1h": snap_1h, "1d": snap_1d}
-    metrics["rollup_seconds"] = time.time() - t_roll
+        # ---- tier cascade -------------------------------------------------
+        t_roll = time.time()
+        tier_1m = rollup.day_layout(rollup.rollup_base(cells, "1m", key_cols), key_cols)
+        tier_1m.persist()
+        frames = {"1m": tier_1m, **{t: _cascade(tier_1m, t, key_cols) for t in ("1h", "1d")}}
+        staged = {
+            f"tier_{t}": catalog.stage(df, f"tier_{t}", partition_by=["day"])
+            for t, df in frames.items()
+        }
+        rows = [
+            lineage.lineage_rows(df, f"tier_{t}", staged[f"tier_{t}"]["id"], [*key_cols, "day"])
+            for t, df in frames.items()
+        ]
+        staged[lineage.LINEAGE_TABLE] = catalog.stage(
+            lineage_table(functools.reduce(DataFrame.unionByName, rows)), lineage.LINEAGE_TABLE
+        )
+        publish(staged)
+        mark("tiers_write_lineage", tick)
+        metrics["tier_snapshots"] = {t: staged[f"tier_{t}"]["id"] for t in frames}
+        metrics["rollup_seconds"] = time.time() - t_roll
+    finally:
+        cells.unpersist()
+        if tier_1m is not None:
+            tier_1m.unpersist()
 
     # ---- retention ------------------------------------------------------
     if ttl_days:
@@ -155,7 +222,6 @@ def run_pipeline(
             catalog, spark, now or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None), ttl_days
         )
 
-    cells.unpersist()
     metrics["total_seconds"] = time.time() - t0
     metrics["sequences_per_second"] = n_seq / metrics["total_seconds"]
     return metrics

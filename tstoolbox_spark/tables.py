@@ -39,13 +39,14 @@ Manifests written before this shape have ``path`` and no ``refs`` (or
 ``basePath``/``paths`` on metadata-only records); ``_normalize`` maps
 them on read, so they read, time-travel and expire unchanged.
 
-Commits are atomic: data lands in a new snap dir first, then one
-function (``_swap``) takes the table leases in sorted order, validates
-every expected base snapshot, and replaces each manifest via os.replace
-(POSIX atomic rename), so readers always see a complete snapshot and a
-killed writer leaves the previous snapshot current — the property the
-resume test (§5.3.4) relies on. A lease whose owner died on this host
-is broken by the next committer.
+Commits are atomic and two-phase: ``stage`` lands data in a new snap
+dir, unreferenced, so a caller can check it first; then ``publish``
+takes the table leases in sorted order, validates every expected base
+snapshot, and replaces each manifest via os.replace (POSIX atomic
+rename), so readers always see a complete snapshot and a killed writer
+leaves the previous snapshot current — the property the resume test
+(§5.3.4) relies on. A lease whose owner died on this host is broken by
+the next committer.
 
 Interop contract — what this catalog IS and IS NOT (VERDICT r3 #8):
 
@@ -261,68 +262,7 @@ class ParquetSnapshotCatalog:
                 self._release_lock(t)
 
     # ------------------------------------------------------------- commits
-    def _swap(self, commits: list[tuple], intent: str | None = None) -> None:
-        """The one manifest swap. ``commits`` is [(table, snapshot,
-        expected_current)]. A write-ahead intent file records the
-        snapshots first (unless replaying ``intent``); then, under every
-        table's lease (taken in sorted order), each ``expected_current``
-        is checked before the first swap, and each snapshot is appended
-        and made current — skipped if its id is already present, so a
-        replay is idempotent. A conflict deletes the commit's data
-        directories and intent and raises CommitConflict; a crash
-        between swaps leaves the intent for :meth:`recover_pending`."""
-        if intent is None:
-            intent = os.path.join(self.root, f".pending-group-{uuid.uuid4().hex}.json")
-            _write_json(intent, [{"table": t, "snap": s} for t, s, _ in commits])
-        with self._locked(t for t, _, _ in commits):
-            for t, snap, expected in commits:
-                cur = self._read_manifest(t)["current"]
-                if expected is not _UNSET and cur != expected:
-                    for _, s, _ in commits:
-                        if s["path"]:
-                            shutil.rmtree(s["path"], ignore_errors=True)
-                    os.remove(intent)
-                    raise CommitConflict(
-                        f"table {t!r}: current snapshot is {cur!r}, expected {expected!r}"
-                    )
-            for t, snap, _ in commits:
-                m = self._read_manifest(t)
-                if all(s["id"] != snap["id"] for s in m["snapshots"]):
-                    m["snapshots"].append(snap)
-                    m["current"] = snap["id"]
-                    self._write_manifest(t, m)
-        os.remove(intent)
-
-    def write_snapshot(
-        self,
-        df: DataFrame,
-        table: str,
-        partition_by: list[str] | None = None,
-        properties: dict | None = None,
-        compression: str | None = None,
-        expected_current: str | None | object = _UNSET,
-    ) -> str:
-        """Write df as a new snapshot of ``table``; returns snapshot id.
-        The snapshot becomes current only when the manifest swap lands.
-
-        ``compression`` overrides the session parquet codec — pass
-        'uncompressed' for tables whose payload is already
-        entropy-coded (the Gorilla blob table), where zstd burns CPU on
-        every write AND every read for ~0 size gain.
-
-        ``expected_current`` (a snapshot id, or None for "table must
-        still be empty") opts into optimistic concurrency: the data
-        write runs OUTSIDE the commit lock (as in Iceberg — data files
-        first, metadata swap last), and the commit raises
-        CommitConflict if another writer landed in between, deleting
-        this writer's orphaned data directory.
-        """
-        spec = {"df": df, "table": table, "partition_by": partition_by,
-                "properties": properties, "compression": compression,
-                "expected_current": expected_current}
-        return self.commit_group([spec])[table]
-
-    def _prepare_snapshot(
+    def stage(
         self,
         df: DataFrame,
         table: str,
@@ -330,9 +270,16 @@ class ParquetSnapshotCatalog:
         properties: dict | None = None,
         compression: str | None = None,
     ) -> dict:
-        """Phase 1 of a commit: land the data files and build the
-        snapshot record — durable but NOT yet referenced by any
-        manifest (Iceberg's data-files-first discipline)."""
+        """Phase 1 of a commit: land the data files in a new snap dir and
+        return the snapshot record — durable but NOT yet referenced by
+        any manifest (Iceberg's data-files-first discipline), so a
+        caller can check the files before :meth:`publish` makes them
+        visible, or delete ``record["path"]`` to drop them.
+
+        ``compression`` overrides the session parquet codec — pass
+        'uncompressed' for tables whose payload is already
+        entropy-coded (the Gorilla blob table), where zstd burns CPU on
+        every write AND every read for ~0 size gain."""
         snap = _record(
             _BLANK,
             partition_by=partition_by or [],
@@ -349,6 +296,70 @@ class ParquetSnapshotCatalog:
             writer = writer.option("compression", compression)
         writer.parquet(data_dir)
         return snap
+
+    def publish(self, commits: list[tuple], intent: str | None = None) -> None:
+        """Phase 2 of a commit, the one manifest swap. ``commits`` is
+        [(table, snapshot, expected_current)]: ``expected_current`` is a
+        snapshot id, None for "table must still be empty", or the
+        internal no-expectation sentinel. Under every table's lease
+        (taken in sorted order) a write-ahead intent file records the
+        snapshots (unless replaying ``intent``), each expectation is
+        checked before the first swap, and each snapshot is appended and
+        made current — skipped if its id is already present, so a replay
+        is idempotent. A conflict deletes the commit's data directories
+        and intent and raises CommitConflict; a crash between swaps
+        leaves the intent for :meth:`recover_pending`, which rolls the
+        group forward. The intent lives and dies under the leases, so a
+        replay that obtains them never races the live writer of its
+        group: that writer has either finished (the intent is gone, and
+        the replay does nothing) or died."""
+        with self._locked(t for t, _, _ in commits):
+            if intent is None:
+                intent = os.path.join(self.root, f".pending-group-{uuid.uuid4().hex}.json")
+                _write_json(intent, [{"table": t, "snap": s} for t, s, _ in commits])
+            elif not os.path.exists(intent):
+                return
+            for t, snap, expected in commits:
+                cur = self._read_manifest(t)["current"]
+                if expected is not _UNSET and cur != expected:
+                    for _, s, _ in commits:
+                        if s["path"]:
+                            shutil.rmtree(s["path"], ignore_errors=True)
+                    os.remove(intent)
+                    raise CommitConflict(
+                        f"table {t!r}: current snapshot is {cur!r}, expected {expected!r}"
+                    )
+            for t, snap, _ in commits:
+                m = self._read_manifest(t)
+                if all(s["id"] != snap["id"] for s in m["snapshots"]):
+                    m["snapshots"].append(snap)
+                    m["current"] = snap["id"]
+                    self._write_manifest(t, m)
+            os.remove(intent)
+
+    def write_snapshot(
+        self,
+        df: DataFrame,
+        table: str,
+        partition_by: list[str] | None = None,
+        properties: dict | None = None,
+        compression: str | None = None,
+        expected_current: str | None | object = _UNSET,
+    ) -> str:
+        """Write df as a new snapshot of ``table`` (:meth:`stage`, then
+        :meth:`publish`); returns snapshot id. The snapshot becomes
+        current only when the manifest swap lands.
+
+        ``expected_current`` (a snapshot id, or None for "table must
+        still be empty") opts into optimistic concurrency: the data
+        write runs OUTSIDE the commit lock (as in Iceberg — data files
+        first, metadata swap last), and the commit raises
+        CommitConflict if another writer landed in between, deleting
+        this writer's orphaned data directory.
+        """
+        snap = self.stage(df, table, partition_by, properties, compression)
+        self.publish([(table, snap, expected_current)])
+        return snap["id"]
 
     def _assign_field_ids(self, table: str, names: list[str]) -> dict[str, int]:
         """Iceberg-style stable column ids: a name seen in the previous
@@ -374,23 +385,18 @@ class ParquetSnapshotCatalog:
         ``writes``: [{'df', 'table', 'partition_by'?, 'properties'?,
         'compression'?, 'expected_current'?}, ...].
 
-        Two-phase protocol:
-          1. every table's data dir lands (durable, unreferenced);
-          2. :meth:`_swap` writes a write-ahead INTENT file recording
-             all prepared snapshots, validates every
-             ``expected_current`` under ALL table leases, swaps each
-             manifest, and removes the intent.
-        A conflict aborts the whole group (data dirs + intent deleted,
-        CommitConflict). A crash between swaps leaves the intent on
-        disk; :meth:`recover_pending` rolls the group FORWARD
-        (idempotently re-applying missing manifest entries), so readers
+        Two-phase protocol: :meth:`stage` lands every table's data dir
+        (durable, unreferenced), then one :meth:`publish` swaps every
+        manifest. A conflict aborts the whole group (data dirs + intent
+        deleted, CommitConflict); after a crash between swaps,
+        :meth:`recover_pending` rolls the group FORWARD, so readers
         either see none or all of the group after repair.
         Returns {table: snapshot_id}.
         """
-        prepared = [
+        staged = [
             (
                 w["table"],
-                self._prepare_snapshot(
+                self.stage(
                     w["df"], w["table"], w.get("partition_by"),
                     w.get("properties"), w.get("compression"),
                 ),
@@ -398,22 +404,24 @@ class ParquetSnapshotCatalog:
             )
             for w in writes
         ]
-        self._swap(prepared)
-        return {t: s["id"] for t, s, _ in prepared}
+        self.publish(staged)
+        return {t: s["id"] for t, s, _ in staged}
 
     def recover_pending(self) -> int:
         """Roll FORWARD any crashed commits: for every intent file,
         idempotently re-apply the manifest entries that did not land,
-        then drop the intent. Returns the number of groups repaired.
-        Call on catalog open after an unclean shutdown (the
-        streaming/pipeline resume path does the analogous thing with
-        checkpoints)."""
+        then drop the intent. Returns the number of intents found (a
+        group whose live writer finished meanwhile counts, and is left
+        alone). Safe beside live writers (see :meth:`publish`), so
+        ``run_pipeline`` calls it on every start."""
         repaired = 0
         for entry in sorted(os.listdir(self.root)):
             if entry.startswith(".pending-group-") and entry.endswith(".json"):
                 path = os.path.join(self.root, entry)
                 group = _read_json(path)
-                self._swap([(i["table"], i["snap"], _UNSET) for i in group], path)
+                if group is None:  # its writer finished after the listing
+                    continue
+                self.publish([(i["table"], i["snap"], _UNSET) for i in group], path)
                 repaired += 1
         return repaired
 
@@ -433,7 +441,7 @@ class ParquetSnapshotCatalog:
     def _commit_child(self, table: str, cur: dict, **changes) -> str:
         """Commit a metadata-only snapshot derived from ``cur``."""
         snap = _record(cur, **changes)
-        self._swap([(table, snap, cur["id"])])
+        self.publish([(table, snap, cur["id"])])
         return snap["id"]
 
     def _kept_schema(self, spark: SparkSession, table: str, refs: list[dict], schema: dict) -> dict:
@@ -489,7 +497,7 @@ class ParquetSnapshotCatalog:
             [{"basePath": data_dir, "paths": None}], partition_col, lambda v: True
         )
         snap["schema"] = self._kept_schema(spark, table, snap["refs"], snap["schema"])
-        self._swap([(table, snap, cur["id"])])
+        self.publish([(table, snap, cur["id"])])
         return snap["id"]
 
     def drop_partitions_before(
