@@ -1,14 +1,24 @@
 """Catalog snapshot shape: manifests written before ``refs`` existed
-still read, time-travel, take partition edits and expire; and a table
+still read, time-travel, take partition edits and expire; a table
 emptied by a TTL drop or a partition overwrite reads back with the
-columns and types it had."""
+columns and types it had; an unpartitioned snapshot reads without a
+Spark job; and expire_snapshots reclaims what a killed writer staged,
+but nothing a live writer or an open intent still needs."""
 
 from __future__ import annotations
 
 import json
 import os
+import signal
+import subprocess
+import sys
+import time
 
-from tstoolbox_spark.tables import ParquetSnapshotCatalog
+from pyspark.sql import functions as F
+
+from tests.test_runner import CHILD, REPO
+from tstoolbox_spark.datagen import generate_sequences
+from tstoolbox_spark.tables import ORPHAN_AGE_S, ParquetSnapshotCatalog
 
 
 def test_legacy_full_snapshot_manifest(spark, tmp_path):
@@ -70,3 +80,96 @@ def test_overwrite_to_empty_keeps_read_dtypes(spark, tmp_path):
     out = cat.read(spark, "t")
     assert out.count() == 0
     assert out.dtypes == before
+
+
+def test_unpartitioned_read_is_footer_free(spark, tmp_path):
+    """No Spark job to read a whole-directory, unpartitioned snapshot,
+    and the dtypes footer inference would give, also after a rename and
+    an added column."""
+    cat = ParquetSnapshotCatalog(str(tmp_path / "cat"))
+    df = spark.sql(
+        "SELECT CAST(id AS STRING) AS doc_id, array(CAST(id AS INT)) AS tokens, id AS n, "
+        "id / 3 AS v, timestamp_seconds(id) AS ts, CAST(timestamp_seconds(id) AS TIMESTAMP_NTZ) "
+        "AS ts_ntz, CAST(id AS DECIMAL(38, 0)) AS d, unhex('00ff') AS b FROM range(5)"
+    )
+    cat.write_snapshot(df, "t")
+    path = cat.current_snapshot("t")["path"]
+    tracker = spark.sparkContext.statusTracker()
+
+    def read_without_jobs():
+        last = max(tracker.getJobIdsForGroup(None), default=-1)
+        out = cat.read(spark, "t")
+        assert [j for j in tracker.getJobIdsForGroup(None) if j > last] == []
+        return out
+
+    assert read_without_jobs().dtypes == spark.read.parquet(path).dtypes
+    cat.rename_column("t", "v", "value")
+    cat.add_column("t", "extra", "string")
+    inferred = spark.read.parquet(path).withColumnRenamed("v", "value").withColumn(
+        "extra", F.lit(None).cast("string"))
+    out = read_without_jobs()
+    assert out.dtypes == inferred.dtypes
+    assert out.exceptAll(inferred).count() == 0 and inferred.exceptAll(out).count() == 0
+
+
+def _age(path, seconds):
+    old = time.time() - seconds
+    for root, dirs, files in os.walk(path):
+        for n in (".", *dirs, *files):
+            os.utime(os.path.join(root, n), (old, old))
+
+
+def test_expire_reclaims_staged_dirs_of_a_killed_run(spark, tmp_path):
+    """A run SIGKILLed between staging its tiers and publishing them
+    leaves snap dirs no manifest references. expire_snapshots keeps
+    them while they are fresh (a live writer's would be), takes them
+    and lease tombstones once old, and spares an old dir an open
+    intent still names and a fresh staged one."""
+    inp, work = str(tmp_path / "input"), str(tmp_path / "work")
+    generate_sequences(spark, 4000, partitions=4).write.parquet(inp)
+    script = tmp_path / "child.py"
+    script.write_text(CHILD.format(repo=REPO, inp=inp, work=work))
+    child = subprocess.run(
+        [sys.executable, str(script)], capture_output=True, text=True, timeout=900
+    )
+    assert child.returncode == -signal.SIGKILL, child.stdout + child.stderr
+    assert "STAGED" in child.stdout
+
+    cat = ParquetSnapshotCatalog(work)
+    tables = ("compressed", "lineage", "tier_1m", "tier_1h", "tier_1d")
+
+    def snap_dirs():
+        return {
+            os.path.join(work, t, e)
+            for t in tables
+            for e in os.listdir(os.path.join(work, t))
+            if e.startswith("snap-")
+        }
+
+    live = {s["path"] for t in tables for s in cat.snapshots(t)}
+    leaked = snap_dirs() - live
+    assert {os.path.basename(os.path.dirname(p)) for p in leaked} == {
+        "lineage", "tier_1m", "tier_1h", "tier_1d"}
+
+    rows = spark.range(3).select(F.col("id").alias("x"))
+    fresh = cat.stage(rows, "tier_1m")["path"]
+    held = cat.stage(rows, "tier_1h")
+    intent = os.path.join(work, ".pending-group-held.json")
+    with open(intent, "w") as f:
+        json.dump([{"table": "tier_1h", "snap": held}], f)
+    tomb = os.path.join(work, "tier_1d", ".commit-lock.dead-0")
+    os.makedirs(tomb)
+    with open(os.path.join(tomb, "owner.json"), "w") as f:
+        json.dump({"pid": 0}, f)
+
+    for t in tables:  # everything fresh: nothing goes
+        cat.expire_snapshots(t, keep_last=10)
+    assert snap_dirs() == live | leaked | {fresh, held["path"]} and os.path.isdir(tomb)
+
+    for p in (*leaked, held["path"], tomb):
+        _age(p, ORPHAN_AGE_S + 60)
+    for t in tables:
+        cat.expire_snapshots(t, keep_last=10)
+    assert snap_dirs() == live | {fresh, held["path"]} and not os.path.exists(tomb)
+    assert cat.read(spark, "compressed").count() > 0
+    os.remove(intent)

@@ -79,9 +79,3 @@ def generate_sequences(
         lambda i: F.pmod(F.xxhash64(F.col("doc_id"), i, F.lit(seed)), F.lit(VOCAB_SIZE)).cast("int"),
     )
     return df.select("doc_id", tokens.alias("tokens"), "n_tok", "source")
-
-
-def write_sequences(
-    spark: SparkSession, path: str, n_rows: int, seed: int = 42, partitions: int | None = None
-) -> None:
-    generate_sequences(spark, n_rows, seed, partitions).write.mode("overwrite").parquet(path)

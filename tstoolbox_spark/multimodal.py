@@ -103,13 +103,6 @@ def resize_stub(df: DataFrame, width: int, height: int) -> DataFrame:
     )
 
 
-def frame_sample_stub(df: DataFrame, every_ms: int) -> DataFrame:
-    """Video frame sampling — stub: no video codec in this container."""
-    raise NotImplementedError(
-        "frame sampling requires pyav/ffmpeg on the executors."
-    )
-
-
 # Published file signatures ("magic numbers", public knowledge — e.g.
 # the IANA media-type registries and format specs): prefix byte
 # patterns, plus the two offset rules (RIFF subtype at byte 9, ISO

@@ -15,8 +15,7 @@ Why Arrow (not pandas) grouped maps: the hot columns are
 flat buffers — ``ListArray.flatten()`` is the already-concatenated
 token stream and ``StringArray.buffers()`` give (offsets, utf8 blob) —
 so the codec consumes/produces them zero-copy, with no object-array
-materialization and no np.concatenate over per-row arrays. The pandas
-path is kept as a fallback for older PySpark.
+materialization and no np.concatenate over per-row arrays.
 
 Scale notes: each cell is sized by bucketing.py to a bounded row count
 so batches fit worker memory; the groupBy is the one pre-codec shuffle.
@@ -135,16 +134,18 @@ def decompress(compressed_df: DataFrame) -> DataFrame:
     return compressed_df.mapInArrow(_decode_cell_arrow, schema=SEQUENCE_SCHEMA)
 
 
-def digest() -> list[Column]:
-    """The round-trip digest of sequence rows, as aggregate columns any
+def digest(cols=("doc_id", "tokens")) -> list[Column]:
+    """The digest of rows over ``cols``, as aggregate columns any
     ``DataFrame.observe`` or ``agg`` can take: the row count and two
-    order-independent sums of a per-row fingerprint
-    xxhash64(doc_id, tokens), reduced modulo two primes. The same rows
-    in any order and partitioning give the same digest; a differing row
-    changes it unless both reductions collide. Shuffle-free, so it
-    rides on an action that already runs (the cells' cache fill, the
-    decode of the staged blobs)."""
-    h = F.xxhash64(F.col("doc_id"), F.col("tokens"))
+    order-independent sums of a per-row fingerprint xxhash64(cols),
+    reduced modulo two primes. The same rows in any order and
+    partitioning give the same digest; a differing row changes it
+    unless both reductions collide. Shuffle-free, so it rides on an
+    action that already runs (the cells' cache fill and the decode of
+    the staged blobs, over (doc_id, tokens): the round-trip check; a
+    tier fold's touched-days collect, over every column: the batch's
+    identity)."""
+    h = F.xxhash64(*[F.col(c) for c in cols])
     return [
         F.count(F.lit(1)).alias("rows"),
         F.sum(F.pmod(h, F.lit(2**31 - 1)).cast("decimal(38,0)")).alias("d1"),

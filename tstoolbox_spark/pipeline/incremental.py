@@ -14,12 +14,17 @@ The engine's tier rows are COMPOSABLE PARTIALS — sum/count/min/max
 
 i.e. union the late batch's own partials with the existing tier rows
 and re-aggregate at the same granularity. Cost is
-O(|late| + |touched buckets|). With day-partitioned tier storage only
-the touched ``day=`` partitions are read (Catalyst partition pruning
-on the `.where(day IN ...)` scan) and rewritten
-(``catalog.overwrite_partitions`` — untouched days are carried by
-reference, metadata-only). The 100 TB shape: an hour of late data
-touches ~1 day directory per tier, not a tier scan.
+O(|late| + |touched buckets|). The catalog-level refresh is
+``partials.fold``, the one tier write every family shares: it reads
+only the touched ``day=`` partitions of the finest tier, cascades the
+coarser tiers from the merged days in memory, and publishes every tier
+plus its lineage rows as ONE commit group that replaces only those
+days (untouched days are carried by reference, metadata-only). The
+group records the batch's digest, so refreshing with the same batch
+twice counts it once, and a crash before the publish leaves every
+tier as it was. The 100 TB shape: an hour of late data touches ~1 day
+directory per tier, not a tier scan. The functions below bind the
+rollup family's names to it.
 
 Reference semantics anchor: the refreshed buckets must equal a full
 recompute of tstoolbox ``aggregate`` over raw ∪ late
@@ -31,11 +36,15 @@ driver query's full-recompute SQL oracle.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..tables import ParquetSnapshotCatalog
 from . import partials, rollup
+
+#: distinct ``day`` partitions a batch of partials lands in
+touched_days = partials.touched_days
 
 
 def merge_partials(
@@ -53,27 +62,11 @@ def incremental_tier_refresh(
     tier: str = "1m",
     key_cols: tuple[str, ...] = ("source",),
 ) -> DataFrame:
-    """Fold a late batch of RAW sequences into an existing tier of
-    partials. Never touches raw history: the only aggregation over raw
-    is over ``late_raw`` itself."""
-    late_parts = rollup.rollup_base(late_raw, tier, key_cols)
-    return merge_partials(
-        existing.unionByName(late_parts.select(*existing.columns)),
-        tier,
-        key_cols,
-    )
-
-
-def touched_days(late_parts: DataFrame) -> list[str]:
-    """Distinct ``day`` partition values a late batch lands in —
-    metadata-scale collect (an hour of late data is 1-2 days)."""
-    return sorted(
-        r["day"]
-        for r in rollup.day_partition(late_parts)
-        .select("day")
-        .distinct()
-        .collect()
-    )
+    """Fold a late batch of RAW sequences into an existing in-memory
+    tier of partials. Never touches raw history: the only aggregation
+    over raw is over ``late_raw`` itself."""
+    late_parts = rollup.rollup_base(late_raw, tier, key_cols).select(*existing.columns)
+    return merge_partials(existing.unionByName(late_parts), tier, key_cols)
 
 
 def refresh_tier_snapshot(
@@ -84,27 +77,10 @@ def refresh_tier_snapshot(
     tier: str,
     key_cols: tuple[str, ...] = ("source",),
 ) -> str:
-    """Catalog-level refresh: read ONLY the day partitions the late
-    batch touches, merge partials, overwrite ONLY those partitions
-    (untouched days carried by reference — Iceberg
-    ``overwritePartitions`` semantics). Returns the new snapshot id.
-    """
-    late_parts = rollup.rollup_base(late_raw, tier, key_cols)
-    days = touched_days(late_parts)
-    if not days:
-        cur = catalog.current_snapshot(table)
-        return cur["id"] if cur else ""
-    # partition-pruned scan of the touched days only
-    existing = catalog.read(spark, table).where(F.col("day").isin(days))
-    merged = merge_partials(
-        existing.drop("day").unionByName(
-            late_parts.select(*[c for c in existing.columns if c != "day"])
-        ),
-        tier,
-        key_cols,
-    )
-    out = rollup.day_layout(merged, key_cols)
-    return catalog.overwrite_partitions(spark, out, table, "day", days)
+    """Fold a late batch into ONE rollup tier ``table`` (whose name
+    ends in ``tier``); returns its current snapshot id."""
+    spec = replace(partials.ROLLUP, prefix=table.removesuffix(tier))
+    return partials.fold(catalog, spec, late_raw, key_cols, (tier,))[tier]
 
 
 def refresh_all_tiers(
@@ -112,41 +88,7 @@ def refresh_all_tiers(
     spark: SparkSession,
     late_raw: DataFrame,
     key_cols: tuple[str, ...] = ("source",),
-    tables: dict[str, str] | None = None,
 ) -> dict[str, str]:
-    """End-to-end incremental refresh of the WHOLE tier cascade for a
-    late batch: fold into 1m, then rebuild ONLY the touched day
-    partitions of 1h and 1d from the refreshed finer tier.
-
-    Day boundaries align with every tier, so a touched day's coarser
-    rows are fully derivable from that day's finer partials — the
-    coarser refresh is a partition-pruned ``rollup_cascade`` over the
-    touched days followed by ``overwrite_partitions``; untouched days
-    of every tier are carried by reference. Total cost is
-    O(|late| + touched-day partials x 3), independent of history
-    length. Returns {tier: new snapshot id}.
-    """
-    tables = tables or {t: f"{partials.ROLLUP.prefix}{t}" for t in rollup.TIER_ORDER}
-    late_parts = rollup.rollup_base(late_raw, "1m", key_cols)
-    days = touched_days(late_parts)
-    out: dict[str, str] = {}
-    if not days:
-        for tier, tbl in tables.items():
-            cur = catalog.current_snapshot(tbl)
-            out[tier] = cur["id"] if cur else ""
-        return out
-    out["1m"] = refresh_tier_snapshot(
-        catalog, spark, tables["1m"], late_raw, "1m", key_cols
-    )
-    for finer, coarser in (("1m", "1h"), ("1h", "1d")):
-        finer_df = (
-            catalog.read(spark, tables[finer])
-            .where(F.col("day").isin(days))
-            .drop("day")
-        )
-        merged = rollup.rollup_cascade(finer_df, coarser, key_cols)
-        redone = rollup.day_layout(merged, key_cols)
-        out[coarser] = catalog.overwrite_partitions(
-            spark, redone, tables[coarser], "day", days
-        )
-    return out
+    """Fold a late batch into every rollup tier (``tier_1m/1h/1d``) as
+    one commit group; returns {tier: current snapshot id}."""
+    return partials.fold(catalog, partials.ROLLUP, late_raw, key_cols, rollup.TIER_ORDER)

@@ -6,17 +6,17 @@ per-partition lineage and metrics rows."
 Every pipeline stage writes, together with its data snapshot, a
 lineage table whose rows are the stage's work units:
 
-    unit     '<source>/<bucket>/<salt>' (compress) or '<source>/<day>'
-    stage    'compress' | 'tier_1m' | 'tier_1h' | 'tier_1d'
+    unit     '<source>/<bucket>/<salt>' (compress) or '<keys…>/<day>'
+    stage    'compress' | a tier table ('tier_1m', 'tier_1h', 'hist_1d', …)
     snapshot the data snapshot id this unit landed in
     rows_out rows the unit wrote
 
 Resume contract: a restarted run lists pending units, anti-joins them
 against lineage rows of completed snapshots, and processes only the
 remainder; because data + lineage commit under the same snapshot swap
-(one ``publish`` of a catalog commit group, runner.py), a unit is
-either fully present with its lineage row or absent — never
-double-counted.
+(one ``publish`` of a catalog commit group: runner.py, and the tier
+fold in partials.py), a unit is either fully present with its lineage
+row or absent — never double-counted.
 """
 
 from __future__ import annotations
@@ -56,15 +56,20 @@ def lineage_rows(
     )
 
 
+def appended(catalog: ParquetSnapshotCatalog, spark: SparkSession, rows: DataFrame) -> DataFrame:
+    """The lineage table with ``rows`` appended, as one file (old + new
+    union — lineage is tiny: one row per work unit per stage), for a
+    caller to stage beside the data it describes."""
+    if catalog.exists(LINEAGE_TABLE):
+        rows = catalog.read(spark, LINEAGE_TABLE).unionByName(rows)
+    return rows.coalesce(1)
+
+
 def append_lineage(
     catalog: ParquetSnapshotCatalog, spark: SparkSession, rows: DataFrame
 ) -> str:
-    """Append lineage rows as a new lineage snapshot (old + new union —
-    lineage is tiny: one row per work unit per stage)."""
-    if catalog.exists(LINEAGE_TABLE):
-        prev = catalog.read(spark, LINEAGE_TABLE)
-        rows = prev.unionByName(rows)
-    return catalog.write_snapshot(rows, LINEAGE_TABLE)
+    """Append lineage rows as a new lineage snapshot on its own."""
+    return catalog.write_snapshot(appended(catalog, spark, rows), LINEAGE_TABLE)
 
 
 def completed_units(

@@ -1,4 +1,4 @@
-"""Mergeable tier partials: one spec per family, four derivations.
+"""Mergeable tier partials: one spec per family, generic derivations.
 
 Every tier row the engine stores is a COMPOSABLE PARTIAL: re-
 aggregating partial rows with the family's merge aggregates yields
@@ -19,11 +19,16 @@ therefore fully described by a :class:`Partial` spec:
 - ``prefix``: the catalog table prefix (``f"{prefix}{tier}"``);
 - ``finalize``: the read-side finalizer the router applies.
 
-and the four generic functions below derive everything else:
+and the generic functions below derive everything else:
 
 - :func:`base` / :func:`cascade` — batch tiers bucketed by
   ``date_trunc`` (or no time bucket at all when ``tier`` is None,
   e.g. a global CMS grid or a Bloom filter);
+- :func:`fold` — the one catalog write of fixed tiers: a batch of raw
+  rows merged into the committed tiers, every tier plus its lineage
+  rows staged (:func:`stage_tiers`, which the pipeline runner also
+  uses for its full rebuild) and published as ONE commit group that
+  records the batch's digest, so a replayed batch is a no-op;
 - :func:`stream` — the Structured Streaming twin, bucketed by
   ``window.start`` under a watermark (exactly-once file sink, resume
   from the checkpoint, ``availableNow`` drain);
@@ -36,21 +41,23 @@ inner…)`` and emit ``(ts, keys…, inner…, aggregates…)``.
 
 Adding a family: write its kernel (hash front end, bucket function)
 in its own module, add one ``Partial`` to :data:`REGISTRY`, and bind
-its public names with one-line calls to the four functions.
+its public names with one-line calls to the generic functions.
 ``tests/test_partials.py`` then checks the cascade identity and the
 streaming schema for it.
 """
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field, replace
 from typing import Callable, NamedTuple
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import ParquetSnapshotCatalog
 from ..timeaxis import with_time_axis
+from . import compress, lineage
 
 
 class Tier(NamedTuple):
@@ -141,6 +148,105 @@ def cascade(
     None). ``date_trunc`` at the partials' own unit is idempotent, so
     this is also the late-batch merge."""
     return _merge(spec, finer, key_cols, _bucket(tier, "ts"))
+
+
+def touched_days(parts: DataFrame) -> list[str]:
+    """The distinct ``day`` partitions that partials land in, sorted —
+    a metadata-scale collect (an hour of late data is 1-2 days)."""
+    return sorted(r[0] for r in rollup.day_partition(parts).select("day").distinct().collect())
+
+
+def stage_tiers(
+    catalog: ParquetSnapshotCatalog, spec: Partial, finest: DataFrame, tiers, key_cols=(),
+    days: list[str] | None = None, properties: dict | None = None,
+) -> dict[str, dict]:
+    """Stage ``tiers`` (finest first) of ``spec`` from ``finest``, the
+    finest tier's partials, plus their lineage rows appended to the
+    lineage table; returns {table: staged record} in publish order.
+    ``finest`` is laid out by day (``rollup.day_layout``) and cached
+    once; each coarser tier is cascaded from it with ``day`` among the
+    group keys, so the cached clustering serves its aggregate and its
+    partitioned write with no Exchange, in the same layout. ``days``
+    are the only partitions replaced (None: every day)."""
+    top = rollup.day_layout(finest, key_cols).persist()
+    try:
+        frames = {f"{spec.prefix}{tiers[0]}": top}
+        for t in tiers[1:]:
+            out = cascade(spec, top, t, (*key_cols, "day"))
+            frames[f"{spec.prefix}{t}"] = out.sortWithinPartitions(
+                "day", *key_cols, "ts").select(*top.columns)
+        staged = {
+            t: catalog.stage(df, t, ["day"], properties, replace=days) for t, df in frames.items()
+        }
+        rows = [
+            lineage.lineage_rows(df, t, staged[t]["id"], [*key_cols, "day"])
+            for t, df in frames.items()
+        ]
+        lin = lineage.appended(
+            catalog, top.sparkSession, functools.reduce(DataFrame.unionByName, rows))
+        staged[lineage.LINEAGE_TABLE] = catalog.stage(lin, lineage.LINEAGE_TABLE, properties=properties)
+    finally:
+        top.unpersist()
+    return staged
+
+
+def fold(
+    catalog: ParquetSnapshotCatalog, spec: Partial, batch: DataFrame, key_cols=(),
+    tiers=("1m", "1h", "1d"),
+) -> dict[str, str]:
+    """Fold a batch of raw rows into the committed ``tiers`` (finest
+    first, fixed tiers) of ``spec``, any exact family, as ONE commit
+    group; returns {tier: current snapshot id}. Never rescans raw
+    history and never reads back what it has just written:
+
+    1. the batch's finest partials are built once and cached;
+    2. one action collects the days they touch and observes the batch
+       digest (``compress.digest`` over every column of the raw rows:
+       order-independent, so a re-delivered batch has the same one);
+    3. only those days of the committed finest tier are read, and
+       merged with the batch's partials (partials merge exactly);
+    4. :func:`stage_tiers` lays the merged days out, cascades the
+       coarser tiers from them in memory and stages every tier,
+       replacing only those days, plus the lineage rows;
+    5. one ``publish`` swaps every manifest, validated against the
+       snapshots read.
+
+    Replay-safe: every snapshot of the group records the digest in
+    ``properties["batch_digest"]``, and a fold whose digest a snapshot
+    of the finest table already records does nothing (nor does an
+    empty batch). A crash before the publish leaves every tier as it
+    was; a group a crash left half-applied is rolled forward first.
+    The tiers must all exist or none: a coarser tier built from the
+    touched days alone would miss every other day."""
+    catalog.recover_pending()
+    tables = {t: f"{spec.prefix}{t}" for t in tiers}
+    expected = {
+        t: (catalog.current_snapshot(t) or {}).get("id")
+        for t in [*tables.values(), lineage.LINEAGE_TABLE]
+    }
+    if 0 < sum(bool(expected[t]) for t in tables.values()) < len(tables):
+        raise FileNotFoundError(f"a fold writes {list(tables.values())}: all must exist, or none")
+    finest = tables[tiers[0]]
+    seen = Observation()
+    parts = base(spec, batch.observe(seen, *compress.digest(sorted(batch.columns))), tiers[0],
+                 key_cols).persist()
+    try:
+        days = touched_days(parts)
+        # an empty batch's observation may be pruned away with its plan
+        props = {"batch_digest": "/".join(str(v) for v in seen.get.values())} if days else {}
+        if not days or any(s["properties"].get("batch_digest") == props["batch_digest"]
+                           for s in catalog.snapshots(finest)):
+            return {t: expected[tbl] or "" for t, tbl in tables.items()}
+        merged = parts
+        if expected[finest]:
+            old = catalog.read(batch.sparkSession, finest, expected[finest])
+            merged = parts.unionByName(old.where(F.col("day").isin(days)).drop("day"))
+        merged = cascade(spec, merged, tiers[0], key_cols)
+        staged = stage_tiers(catalog, spec, merged, tiers, key_cols, days, props)
+        catalog.publish([(t, s, expected[t]) for t, s in staged.items()])
+    finally:
+        parts.unpersist()
+    return {t: staged[tbl]["id"] for t, tbl in tables.items()}
 
 
 def stream(

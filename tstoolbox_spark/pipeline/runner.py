@@ -9,9 +9,10 @@
       → verify: decode the STAGED blobs, observing the    [no shuffle]
         round-trip digest; compare with the source's
       → publish compressed + lineage                      [one commit group]
-      → tier 1m from the cells, clustered by day, cached  [shuffles 2, 3]
-      → tiers 1h and 1d from the cached 1m, with day      [no shuffle]
-        among the keys; tier lineage from the same frames
+      → partials.stage_tiers: tier 1m from the cells,     [shuffles 2, 3]
+        clustered by day, cached; tiers 1h and 1d from    [no shuffle]
+        the cached 1m, with day among the keys; tier
+        lineage from the same frames
       → publish the three tiers + lineage                 [one commit group]
       → TTL retention drops
 
@@ -29,24 +30,27 @@ cluster; scripts/submit_job.py is the entry. Resume: pass the same
 forward first (``recover_pending``); completed compress cells are
 anti-joined away via lineage (lineage.pending_rows), and the pending
 ones land as one new ``refs`` group beside the committed blobs, which
-are carried by reference, never rewritten. Tier writes are idempotent
-snapshot swaps.
+are carried by reference, never rewritten.
+
+The tier block is the tier fold's own path (``partials.stage_tiers``)
+run as a FULL REBUILD: every day is replaced and there is no replay
+check. A resume must leave every tier's current snapshot with its
+lineage rows even when another writer (a compaction) moved a tier
+while the run was down, which a skipped tier write would not.
 """
 
 from __future__ import annotations
 
 import datetime as dt
-import functools
 import shutil
 import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from ..tables import ParquetSnapshotCatalog
 from ..timeaxis import with_time_axis
-from . import bucketing, compress, lineage, retention, rollup
+from . import bucketing, compress, lineage, partials, retention, rollup
 
 #: the compress stage's work unit
 UNIT_COLS = ["source", "bucket", "salt"]
@@ -55,21 +59,6 @@ UNIT_COLS = ["source", "bucket", "salt"]
 def _noop(df: DataFrame) -> None:
     """Run a plan to completion without collecting it."""
     df.write.format("noop").mode("overwrite").save()
-
-
-def _scan(spark: SparkSession, snap: dict) -> DataFrame:
-    """An unpartitioned snapshot this run staged, read with its recorded
-    schema: no footer inference, so no Spark job until an action."""
-    return spark.read.schema(StructType.fromJson(snap["schema"])).parquet(snap["path"])
-
-
-def _cascade(tier_1m: DataFrame, tier: str, key_cols: tuple[str, ...]) -> DataFrame:
-    """``tier`` from the cached, day-clustered 1m tier. ``day`` is among
-    the group keys, so the clustering satisfies the aggregate and the
-    partitioned write with no further Exchange; the columns and the
-    in-partition sort are those of ``rollup.day_layout``."""
-    out = rollup.rollup_cascade(tier_1m, tier, (*key_cols, "day"))
-    return out.sortWithinPartitions("day", *key_cols, "ts").select(*tier_1m.columns)
 
 
 def run_pipeline(
@@ -102,26 +91,13 @@ def run_pipeline(
         phases[name] = round(now_ - since[0], 2)
         since[0] = now_
 
-    published: dict[str, dict] = {}  # the snapshots this run committed
-
     def publish(staged: dict[str, dict]) -> None:
         catalog.publish([(t, s, base[t]) for t, s in staged.items()])
         base.update({t: s["id"] for t, s in staged.items()})
-        published.update(staged)
-
-    def lineage_table(rows: DataFrame) -> DataFrame:
-        """The lineage table with ``rows`` appended, as one file."""
-        lin = lineage.LINEAGE_TABLE
-        if lin in published:
-            rows = _scan(spark, published[lin]).unionByName(rows)
-        elif base[lin]:
-            rows = catalog.read(spark, lin).unionByName(rows)
-        return rows.coalesce(1)
 
     tick = [t0]
     cells = bucketing.bucketed(with_time_axis(sequences), target_rows_per_cell, n_buckets)
     cells.persist()
-    tier_1m = None
     try:
         source = Observation()
         _noop(cells.observe(source, *compress.digest()))  # fills the cache
@@ -151,10 +127,10 @@ def run_pipeline(
             snap = catalog.stage(comp, "compressed", compression="uncompressed")
             staged["compressed"] = snap
             # one row per cell, read into one partition: no shuffle
-            blobs = _scan(spark, snap).coalesce(1)
+            blobs = catalog.scan(spark, snap).coalesce(1)
             lin = lineage.lineage_rows(blobs, "compress", snap["id"], UNIT_COLS)
             staged[lineage.LINEAGE_TABLE] = catalog.stage(
-                lineage_table(lin), lineage.LINEAGE_TABLE)
+                lineage.appended(catalog, spark, lin), lineage.LINEAGE_TABLE)
             if committed is not None:  # resume appends: committed blobs by reference
                 snap["refs"] = catalog.current_snapshot("compressed")["refs"] + snap["refs"]
             new = sizes.get
@@ -172,11 +148,9 @@ def run_pipeline(
 
         # ---- round-trip verification, then publish (north-rule invariant)
         if verify:
-            parts = [_scan(spark, staged["compressed"])] if staged else []
-            if committed is not None:
-                parts.append(committed)
+            # a resume's staged record already refs the committed blobs
+            blobs = catalog.scan(spark, staged["compressed"]) if staged else committed
             decoded = Observation()
-            blobs = functools.reduce(DataFrame.unionByName, parts)
             _noop(compress.decompress(blobs).observe(decoded, *compress.digest()))
             got = decoded.get
             metrics["roundtrip"] = {"total": n_seq, "mismatched": 0 if got == want else -1}
@@ -191,30 +165,14 @@ def run_pipeline(
             metrics["compress_snapshot"] = staged["compressed"]["id"]
         mark("verify", tick)
 
-        # ---- tier cascade -------------------------------------------------
-        t_roll = time.time()
-        tier_1m = rollup.day_layout(rollup.rollup_base(cells, "1m", key_cols), key_cols)
-        tier_1m.persist()
-        frames = {"1m": tier_1m, **{t: _cascade(tier_1m, t, key_cols) for t in ("1h", "1d")}}
-        staged = {
-            f"tier_{t}": catalog.stage(df, f"tier_{t}", partition_by=["day"])
-            for t, df in frames.items()
-        }
-        rows = [
-            lineage.lineage_rows(df, f"tier_{t}", staged[f"tier_{t}"]["id"], [*key_cols, "day"])
-            for t, df in frames.items()
-        ]
-        staged[lineage.LINEAGE_TABLE] = catalog.stage(
-            lineage_table(functools.reduce(DataFrame.unionByName, rows)), lineage.LINEAGE_TABLE
-        )
+        # ---- tier cascade: a full rebuild, every day replaced ----------
+        tier_1m = rollup.rollup_base(cells, "1m", key_cols)
+        staged = partials.stage_tiers(catalog, partials.ROLLUP, tier_1m, rollup.TIER_ORDER, key_cols)
         publish(staged)
         mark("tiers_write_lineage", tick)
-        metrics["tier_snapshots"] = {t: staged[f"tier_{t}"]["id"] for t in frames}
-        metrics["rollup_seconds"] = time.time() - t_roll
+        metrics["tier_snapshots"] = {t: staged[f"tier_{t}"]["id"] for t in rollup.TIER_ORDER}
     finally:
         cells.unpersist()
-        if tier_1m is not None:
-            tier_1m.unpersist()
 
     # ---- retention ------------------------------------------------------
     if ttl_days:

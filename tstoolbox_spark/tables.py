@@ -29,11 +29,13 @@ a list of data-file references::
 plus either ``paths: null`` (the whole directory) or the partition
 directories kept from it. ``path`` is the data directory the snapshot
 owns (reclaimed when it expires), or null for a metadata-only snapshot.
-``write_snapshot`` yields one whole-directory group; a partition
-overwrite keeps the untouched groups and adds the new directory's; a
-TTL drop keeps the retained groups; schema evolution reuses the current
-``refs`` and records ``renames``/``added``, which reads apply. When no
-group is left, reads rebuild the empty frame from ``schema``.
+``stage`` yields one whole-directory group, or, when it replaces a
+list of partitions, the current snapshot's untouched groups plus the
+new directory's; a TTL drop keeps the retained groups; schema
+evolution reuses the current ``refs`` and records ``renames``/
+``added``, which reads apply. When no group is left, reads rebuild the
+empty frame from ``schema``. A whole-directory group of an
+unpartitioned snapshot is read with ``schema`` (no footer inference).
 
 Manifests written before this shape have ``path`` and no ``refs`` (or
 ``basePath``/``paths`` on metadata-only records); ``_normalize`` maps
@@ -45,8 +47,12 @@ takes the table leases in sorted order, validates every expected base
 snapshot, and replaces each manifest via os.replace (POSIX atomic
 rename), so readers always see a complete snapshot and a killed writer
 leaves the previous snapshot current — the property the resume test
-(§5.3.4) relies on. A lease whose owner died on this host is broken by
-the next committer.
+(§5.3.4) relies on. ``write_snapshot`` and ``overwrite_partitions`` are
+one ``stage`` + one ``publish``; a caller that stages several tables
+(the pipeline's tier fold) publishes them as one group. A lease whose
+owner died on this host is broken by the next committer; the staged
+dirs and lease debris a dead writer leaves are reclaimed by
+``expire_snapshots`` once old.
 
 Interop contract — what this catalog IS and IS NOT (VERDICT r3 #8):
 
@@ -74,10 +80,12 @@ NOT PROVIDED (real-Iceberg features that need the table FORMAT):
     catalog services (REST/Hive/Glue).
 
 Porting to real Iceberg is mechanical and confined to this module:
-write_snapshot → writeTo().overwritePartitions(), read(snapshot_id) →
-VERSION AS OF, drop_partitions_before → DELETE WHERE, expire_snapshots
-→ expireSnapshots; every caller (pipeline/, incremental, retention,
-lineage) goes through this surface and nowhere touches the layout.
+stage + publish → a (multi-table) transaction of appends /
+overwritePartitions, read(snapshot_id) → VERSION AS OF,
+drop_partitions_before → DELETE WHERE, expire_snapshots →
+expireSnapshots + remove_orphan_files; every caller (the pipeline's
+runner and tier fold, retention, lineage) goes through this surface
+and nowhere touches the layout.
 """
 
 from __future__ import annotations
@@ -92,6 +100,8 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 #: sentinel: "no concurrency expectation" (None means "expect empty")
@@ -110,6 +120,12 @@ _BLANK = {
     "renames": [],
     "added": {},
 }
+
+
+#: seconds a dead writer's staged dir or lease debris must sit unchanged
+#: before expire_snapshots reclaims it: far beyond any live writer's
+#: stage-to-publish gap (Iceberg's remove_orphan_files waits 3 days)
+ORPHAN_AGE_S = 24 * 3600
 
 
 class CommitConflict(Exception):
@@ -173,6 +189,17 @@ def _write_json(path: str, obj) -> None:
     with open(tmp, "w") as f:
         json.dump(obj, f, indent=1)
     os.replace(tmp, path)  # atomic commit point
+
+
+def _newest_mtime(path: str) -> float:
+    """The newest mtime of ``path`` and of everything under it (0 for
+    what a concurrent sweep removed meanwhile)."""
+    newest = 0.0
+    for root, dirs, files in os.walk(path):
+        for n in (".", *dirs, *files):
+            with contextlib.suppress(FileNotFoundError):
+                newest = max(newest, os.lstat(os.path.join(root, n)).st_mtime)
+    return newest
 
 
 def _proc_start(pid: int) -> str | None:
@@ -269,6 +296,7 @@ class ParquetSnapshotCatalog:
         partition_by: list[str] | None = None,
         properties: dict | None = None,
         compression: str | None = None,
+        replace: list[str] | None = None,
     ) -> dict:
         """Phase 1 of a commit: land the data files in a new snap dir and
         return the snapshot record — durable but NOT yet referenced by
@@ -279,9 +307,25 @@ class ParquetSnapshotCatalog:
         ``compression`` overrides the session parquet codec — pass
         'uncompressed' for tables whose payload is already
         entropy-coded (the Gorilla blob table), where zstd burns CPU on
-        every write AND every read for ~0 size gain."""
+        every write AND every read for ~0 size gain.
+
+        ``replace`` lists values of the one ``partition_by`` column:
+        only those partitions are written (``df`` is filtered to them)
+        and the record's ``refs`` are the current snapshot's other
+        partitions, carried BY REFERENCE, plus the new directory's —
+        Iceberg's ``overwritePartitions`` (zero rows of untouched data
+        rewritten: at 100 TB an hourly late-data refresh rewrites ~1 day
+        directory, not the tier). With no group left, the record keeps
+        the current read schema (:meth:`_kept_schema`)."""
+        cur = None
+        if replace is not None:
+            (col,) = partition_by
+            replace = sorted(set(replace))
+            df = df.where(F.col(col).isin(replace))
+            properties = {**(properties or {}), "overwrite_partitions": replace}
+            cur = self.current_snapshot(table)
         snap = _record(
-            _BLANK,
+            cur or _BLANK,
             partition_by=partition_by or [],
             properties=properties or {},
             schema=json.loads(df.schema.json()),
@@ -295,6 +339,10 @@ class ParquetSnapshotCatalog:
         if compression:
             writer = writer.option("compression", compression)
         writer.parquet(data_dir)
+        if replace is not None:
+            kept = _filter_groups(cur["refs"], col, lambda v: v not in replace) if cur else []
+            snap["refs"] = kept + _filter_groups(snap["refs"], col, lambda v: True)
+            snap["schema"] = self._kept_schema(df.sparkSession, table, snap["refs"], snap["schema"])
         return snap
 
     def publish(self, commits: list[tuple], intent: str | None = None) -> None:
@@ -459,44 +507,13 @@ class ParquetSnapshotCatalog:
         partition_col: str,
         partitions: list[str],
     ) -> str:
-        """Iceberg ``overwritePartitions`` analog: replace ONLY the
-        named partitions of ``table`` with ``df``'s rows, carrying every
-        untouched partition of the current snapshot BY REFERENCE
-        (zero rows of untouched data rewritten — at 100 TB an hourly
-        late-data refresh rewrites ~1 day directory, not the tier).
-
-        ``df`` is filtered to ``partitions`` defensively, written to a
-        new snap dir partitioned by ``partition_col``, and the new
-        snapshot's ``refs`` are the kept groups plus the new dir's
-        (with no group left, the schema rule of :meth:`_kept_schema`).
-        Data lands before the metadata swap; the commit is validated
-        against the base snapshot (optimistic concurrency), and a
-        losing writer's data dir is cleaned up. Returns the new
-        snapshot id.
-        """
-        from pyspark.sql import functions as F
-
+        """Replace ONLY the named partitions of ``table`` with ``df``'s
+        rows (:meth:`stage` with ``replace``, then :meth:`publish`),
+        validated against the current snapshot (optimistic
+        concurrency: a losing writer's data dir is cleaned up). Returns
+        the new snapshot id."""
         cur = self._current(table, partition_col)
-        overwritten = set(partitions)
-        snap = _record(
-            cur,
-            properties={"overwrite_partitions": sorted(overwritten)},
-            schema=json.loads(df.schema.json()),
-            fields=self._assign_field_ids(table, df.columns),
-        )
-        snap["path"] = data_dir = os.path.join(self.root, table, f"snap-{snap['id']}")
-        (
-            df.where(F.col(partition_col).isin(list(overwritten)))
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(data_dir)
-        )
-        snap["refs"] = _filter_groups(
-            cur["refs"], partition_col, lambda v: v not in overwritten
-        ) + _filter_groups(
-            [{"basePath": data_dir, "paths": None}], partition_col, lambda v: True
-        )
-        snap["schema"] = self._kept_schema(spark, table, snap["refs"], snap["schema"])
+        snap = self.stage(df, table, [partition_col], replace=partitions)
         self.publish([(table, snap, cur["id"])])
         return snap["id"]
 
@@ -541,8 +558,6 @@ class ParquetSnapshotCatalog:
         previous snapshot remains time-travelable until expired.
         Rows are unchanged; only the file layout is. Returns the new
         snapshot id."""
-        from pyspark.sql import functions as F
-
         cur = self._current(table)
         if partitions is None:
             prefix = f"{partition_col}="
@@ -622,20 +637,29 @@ class ParquetSnapshotCatalog:
         return self._read_manifest(table)["snapshots"]
 
     def read(self, spark: SparkSession, table: str, snapshot_id: str | None = None) -> DataFrame:
-        """One scan per non-empty ``refs`` group, unioned by name — a
-        whole-directory group is a plain ``spark.read.parquet(dir)``; a
-        partition list keeps its ``basePath`` so the partition column
-        is recovered from the directory names. With no group left, the
-        empty frame comes from the recorded schema (no scan). Renames
-        and added columns apply last (Iceberg resolves the same way via
-        field ids in the file footers)."""
+        """The current snapshot of ``table``, or ``snapshot_id`` (time
+        travel), as :meth:`scan` reads it."""
         m = self._read_manifest(table)
         sid = snapshot_id or m["current"]
         if sid is None:
             raise FileNotFoundError(f"table {table!r} has no current snapshot")
-        snap = next(s for s in m["snapshots"] if s["id"] == sid)
+        return self.scan(spark, next(s for s in m["snapshots"] if s["id"] == sid))
+
+    def scan(self, spark: SparkSession, snap: dict) -> DataFrame:
+        """Read a snapshot record, published or only staged: one scan
+        per non-empty ``refs`` group, unioned by name. A whole-directory
+        group of an unpartitioned snapshot is read with the schema its
+        record carries: no footer inference, so no Spark job until an
+        action. A partitioned one infers from the footers, and a
+        partition list keeps its ``basePath`` so the partition column
+        is recovered from the directory names (typed as read). With no
+        group left, the empty frame comes from the recorded schema (no
+        scan). Renames and added columns apply last (Iceberg resolves
+        the same way via field ids in the file footers)."""
+        schema = snap["schema"] and StructType.fromJson(snap["schema"])
+        reader = spark.read.schema(schema) if schema and not snap["partition_by"] else spark.read
         scans = [
-            spark.read.parquet(g["basePath"])
+            reader.parquet(g["basePath"])
             if g["paths"] is None
             else spark.read.option("basePath", g["basePath"]).parquet(*g["paths"])
             for g in snap["refs"]
@@ -644,17 +668,12 @@ class ParquetSnapshotCatalog:
         if scans:
             df = functools.reduce(DataFrame.unionByName, scans)
         else:
-            from pyspark.sql.types import StructType
-
-            df = spark.createDataFrame([], StructType.fromJson(snap["schema"]))
+            df = spark.createDataFrame([], schema)
         for old, new in snap["renames"]:
             df = df.withColumnRenamed(old, new)
-        if snap["added"]:
-            from pyspark.sql import functions as F
-
-            for name, dtype in snap["added"].items():
-                if name not in df.columns:
-                    df = df.withColumn(name, F.lit(None).cast(dtype))
+        for name, dtype in snap["added"].items():
+            if name not in df.columns:
+                df = df.withColumn(name, F.lit(None).cast(dtype))
         return df
 
     def exists(self, table: str) -> bool:
@@ -670,14 +689,27 @@ class ParquetSnapshotCatalog:
         full (a whole-directory group), which spares it, or by
         partition, in which case only its UNREFERENCED partition
         subdirs are reclaimed (this is where TTL-dropped days are
-        physically deleted)."""
+        physically deleted).
+
+        The same pass reclaims what dead writers left in the table's
+        directory (Iceberg's ``remove_orphan_files``): a ``snap-*`` dir
+        that no record references and no open commit intent names
+        (staged by a run that died before ``publish``), and
+        ``.commit-lock.*`` debris (a broken lease's tombstone, a dead
+        acquirer's prepared lease). Each goes only once nothing under it
+        changed for :data:`ORPHAN_AGE_S`, so a live writer's staging dir
+        is never taken, nor a tombstone whose name a racing lease
+        breaker may still rename onto. Returns the number of snapshots
+        expired."""
         with self._locked([table]):
             m = self._read_manifest(table)
             drop, keep = m["snapshots"][:-keep_last], m["snapshots"][-keep_last:]
-            if not drop:
-                return 0
-            m["snapshots"] = keep
-            self._write_manifest(table, m)
+            if drop:
+                m["snapshots"] = keep
+                self._write_manifest(table, m)
+            orphans = self._orphans(table, keep)
+        for path in orphans:
+            shutil.rmtree(path, ignore_errors=True)
         groups = [g for s in keep for g in s["refs"]]
         whole = {os.path.normpath(g["basePath"]) for g in groups if g["paths"] is None}
         parts = {os.path.normpath(p) for g in groups for p in g["paths"] or []}
@@ -693,6 +725,32 @@ class ParquetSnapshotCatalog:
                 if "=" in entry and os.path.isdir(sub) and sub not in parts:
                     shutil.rmtree(sub, ignore_errors=True)
         return len(drop)
+
+    def _orphans(self, table: str, kept: list[dict]) -> list[str]:
+        """The dead writers' leftovers :meth:`expire_snapshots` reclaims;
+        called under the table's lease (whose acquisition made the
+        table's directory), so no publish to it is in flight and every
+        intent listed is a crashed group's."""
+        tdir = os.path.join(self.root, table)
+        snaps = list(kept)
+        for entry in os.listdir(self.root):
+            if entry.startswith(".pending-group-"):
+                snaps += [i["snap"] for i in _read_json(os.path.join(self.root, entry), [])]
+        # by dir name, which holds the unique snapshot id: robust to
+        # the catalog root being spelled differently by another writer
+        live = {
+            os.path.basename(os.path.normpath(d))
+            for s in snaps
+            for d in [s["path"], *(g["basePath"] for g in s["refs"])]
+            if d
+        }
+        cutoff = time.time() - ORPHAN_AGE_S
+        return [
+            os.path.join(tdir, e)
+            for e in os.listdir(tdir)
+            if (e.startswith("snap-") and e not in live or e.startswith(".commit-lock."))
+            and _newest_mtime(os.path.join(tdir, e)) < cutoff
+        ]
 
 
 def write_bucketed(
