@@ -10,6 +10,7 @@ locked Spark job budget.
 
 from __future__ import annotations
 
+import json
 import os
 import signal
 import subprocess
@@ -120,6 +121,47 @@ def test_folding_a_batch_twice_equals_folding_it_once(spark, seq, split, tmp_pat
     assert {t: len(cat.snapshots(t)) for t in snaps} == snaps
     for t in TIERS:
         _same(cat.read(spark, f"tier_{t}"), rollup.rollup_base(seq, t), t)
+
+
+def test_replay_is_caught_after_the_applying_record_expires(spark, tmp_path):
+    """Fold A, A, B, then expire every table to its current record, and
+    fold A again: A is still known (the digests applied so far ride in
+    every later record, through metadata-only children too), so nothing
+    is counted twice. A catalog whose records carry only the single
+    ``batch_digest`` still turns a replay away."""
+    seq = with_time_axis(generate_sequences(spark, 2000, partitions=4)).persist()
+    day = F.date_format("ts", "yyyy-MM-dd")
+    a, b = seq.where(day == "2024-01-05"), seq.where(day == "2024-01-06")
+    cat = ParquetSnapshotCatalog(str(tmp_path / "cat"))
+    _rollup_tiers(cat, seq.where(~day.isin("2024-01-05", "2024-01-06")))
+
+    def total():
+        return cat.read(spark, "tier_1d").agg(F.sum("n_tok_count")).first()[0]
+
+    def strip_digest_sets():  # as a catalog from before the carried set
+        path = cat._manifest_path("tier_1m")
+        with open(path) as f:
+            m = json.load(f)
+        for s in m["snapshots"]:
+            s["properties"].pop("batch_digests", None)
+        with open(path, "w") as f:
+            json.dump(m, f)
+
+    try:
+        _rollup_tiers(cat, a)
+        once = total()
+        strip_digest_sets()
+        _rollup_tiers(cat, a)
+        assert total() == once < 2000
+        _rollup_tiers(cat, b)
+        assert total() == 2000
+        cat.drop_partitions_before(spark, "tier_1m", "day", "2000-01-01")
+        for t in [*TABLES, "lineage"]:
+            cat.expire_snapshots(t, keep_last=1)
+        _rollup_tiers(cat, a)
+        assert total() == 2000
+    finally:
+        seq.unpersist()
 
 
 def test_refresh_is_one_commit_group_within_the_job_budget(spark, split, tmp_path, monkeypatch):

@@ -629,3 +629,45 @@ def test_streaming_phll_matches_batch(spark, tmp_path):
         fold(batch.join(emitted, "ts")), key_cols=()
     ).collect()
     assert sorted(map(tuple, ea)) == sorted(map(tuple, eb))
+
+
+def test_streaming_resume_across_checkpoint_managers(spark, tmp_path):
+    """A checkpoint written under FileContext's manager (the default
+    before the session switched to the FileSystem-based one) resumes
+    under the session's manager with no cell duplicated or lost: the
+    tier equals a control whose two drains both ran under the session's
+    manager, and every emitted minute equals the batch rollup."""
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    session_manager = spark.conf.get(key, None)
+    with_ts = with_time_axis(generate_sequences(spark, 5000))
+    cutoff = with_ts.agg(F.percentile_approx("ts", 0.6)).collect()[0][0]
+    drops = [with_ts.filter(F.col("ts") <= F.lit(cutoff)).drop("ts"),
+             with_ts.filter(F.col("ts") > F.lit(cutoff)).drop("ts")]
+
+    def drain(run, i):
+        d = tmp_path / run
+        drops[i].write.mode("append").parquet(str(d / "in"))
+        q = continuous_rollup(spark, str(d / "in"), str(d / "tier"), str(d / "ck"))
+        q.awaitTermination(180)
+        return spark.read.parquet(str(d / "tier"))
+
+    spark.conf.set(
+        key, "org.apache.spark.sql.execution.streaming.checkpointing."
+             "FileContextBasedCheckpointFileManager")
+    try:
+        drain("mixed", 0)
+    finally:
+        if session_manager is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, session_manager)
+    mixed = drain("mixed", 1)
+    drain("control", 0)
+    control = drain("control", 1)
+
+    n = mixed.count()
+    assert n > 0
+    assert mixed.groupBy("ts", "source").count().filter(F.col("count") > 1).count() == 0
+    assert mixed.exceptAll(control).count() == 0 and control.exceptAll(mixed).count() == 0
+    batch = rollup_base(with_ts, "1m", ("source",))
+    assert mixed.exceptAll(batch.select(*mixed.columns)).count() == 0

@@ -212,9 +212,13 @@ def fold(
        snapshots read.
 
     Replay-safe: every snapshot of the group records the digest in
-    ``properties["batch_digest"]``, and a fold whose digest a snapshot
-    of the finest table already records does nothing (nor does an
-    empty batch). A crash before the publish leaves every tier as it
+    ``properties["batch_digest"]`` and every digest applied so far in
+    ``properties["batch_digests"]``, which each later record of the
+    table carries forward (``tables.CARRIED``), so expiring the record
+    that applied a batch does not forget it. A fold whose digest the
+    finest table's current record lists, or any of its records names
+    (older catalogs hold only ``batch_digest``), does nothing (nor does
+    an empty batch). A crash before the publish leaves every tier as it
     was; a group a crash left half-applied is rolled forward first.
     The tiers must all exist or none: a coarser tier built from the
     touched days alone would miss every other day."""
@@ -233,10 +237,14 @@ def fold(
     try:
         days = touched_days(parts)
         # an empty batch's observation may be pruned away with its plan
-        props = {"batch_digest": "/".join(str(v) for v in seen.get.values())} if days else {}
-        if not days or any(s["properties"].get("batch_digest") == props["batch_digest"]
-                           for s in catalog.snapshots(finest)):
+        snaps = catalog.snapshots(finest)
+        cur = next((s for s in snaps if s["id"] == expected[finest]), {"properties": {}})
+        applied = {s["properties"].get("batch_digest") for s in snaps} - {None}
+        applied.update(cur["properties"].get("batch_digests", ()))
+        digest = "/".join(str(v) for v in seen.get.values()) if days else None
+        if not days or digest in applied:
             return {t: expected[tbl] or "" for t, tbl in tables.items()}
+        props = {"batch_digest": digest, "batch_digests": sorted(applied | {digest})}
         merged = parts
         if expected[finest]:
             old = catalog.read(batch.sparkSession, finest, expected[finest])

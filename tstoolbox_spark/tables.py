@@ -146,12 +146,22 @@ def _normalize(snap: dict) -> dict:
     return {k: snap.get(k, v) for k, v in _BLANK.items()}
 
 
+#: snapshot properties a record minted from a base inherits unless it
+#: sets them: the set of batches folded into a table must outlive the
+#: records that applied them (``expire_snapshots``) and pass through
+#: metadata-only children (TTL drops, compaction, schema changes)
+CARRIED = ("batch_digests",)
+
+
 def _record(base: dict, **changes) -> dict:
     """Mint a snapshot record: a fresh id and timestamp, ``base``'s
-    refs, schema, fields, partitioning and evolution state, then
-    ``changes``. Owns no directory unless ``changes`` says so."""
+    refs, schema, fields, partitioning, evolution state and
+    :data:`CARRIED` properties, then ``changes``. Owns no directory
+    unless ``changes`` says so."""
     sid = f"{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}"
-    return {**base, "id": sid, "ts": time.time(), "path": None, "properties": {}, **changes}
+    carried = {k: v for k, v in base["properties"].items() if k in CARRIED}
+    props = {**carried, **changes.pop("properties", {})}
+    return {**base, "id": sid, "ts": time.time(), "path": None, "properties": props, **changes}
 
 
 def _filter_groups(refs: list[dict], partition_col: str, keep) -> list[dict]:
