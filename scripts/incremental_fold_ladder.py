@@ -13,7 +13,12 @@ Kept beside ``perfbench`` because it is the only scale instrument for
 - the committed state is read back from catalog PARQUET, not carried
   as an in-session lineage chain, so the history band table streams
   from disk through the batch-side broadcast join exactly as a
-  production fold would.
+  production fold would;
+- the fold's result is then committed (``commit_dedup_state``, the
+  batch's docs appended to the corpus table) and timed apart as
+  ``commit_s``, with the MB each table's new snapshot directory holds
+  (``written_mb``): the band, corpus and lineage appends write the
+  batch's rows only, the cluster table is rewritten whole.
 
 The corpus is synthetic and deterministic (:func:`synth_docs`, shared
 with ``curate_bench.py``). The session is sized from the host
@@ -43,6 +48,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from tstoolbox_spark.pipeline.incremental_dedup import (  # noqa: E402
     BANDS_TABLE,
     CLUSTERS_TABLE,
+    CORPUS_TABLE,
     commit_dedup_state,
     incremental_near_dup_update,
 )
@@ -83,6 +89,12 @@ def synth_docs(spark, n: int, words_per_doc: int = 40):
     )
 
 
+def _mb(path: str) -> float:
+    """MB of the files under ``path``."""
+    return round(sum(os.path.getsize(os.path.join(root, f))
+                     for root, _, files in os.walk(path) for f in files) / 1e6, 3)
+
+
 def main() -> None:
     rungs = [int(x) for x in (sys.argv[1] if len(sys.argv) > 1
                               else "50000,100000,200000").split(",")]
@@ -106,7 +118,7 @@ def main() -> None:
             t0 = time.time()
             nb0, cl0 = incremental_near_dup_update(corpus)
             cat = ParquetSnapshotCatalog(os.path.join(work, "cat"))
-            commit_dedup_state(spark, cat, nb0, cl0, "init")
+            commit_dedup_state(spark, cat, nb0, cl0, "init", corpus_append=corpus)
             init_s = round(time.time() - t0, 2)
 
             old_bands = cat.read(spark, BANDS_TABLE)
@@ -122,6 +134,14 @@ def main() -> None:
             fold_s = round(time.time() - t0, 2)
 
             t0 = time.time()
+            commit_dedup_state(spark, cat, nb, cl, "batch", corpus_append=batch)
+            commit_s = round(time.time() - t0, 2)
+            written_mb = {
+                t: _mb(cat.current_snapshot(t)["path"])
+                for t in (BANDS_TABLE, CORPUS_TABLE, CLUSTERS_TABLE, "lineage")
+            }
+
+            t0 = time.time()
             near_dup_clusters(docs).count()
             rebuild_s = round(time.time() - t0, 2)
 
@@ -130,7 +150,8 @@ def main() -> None:
                 "ts": time.time(), "kind": "fold_ladder",
                 "corpus": n_corpus, "batch": batch_n,
                 "cpus": spark.sparkContext.defaultParallelism,
-                "init_s": init_s, "fold_s": fold_s,
+                "init_s": init_s, "fold_s": fold_s, "commit_s": commit_s,
+                "written_mb": written_mb,
                 "rebuild_s": rebuild_s, "clusters_rows": n_clusters,
             }
             with open(out_path, "a") as f:

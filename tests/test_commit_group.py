@@ -1,5 +1,6 @@
-"""Multi-table atomic commits: all-or-nothing visibility, conflict
-abort, and crash roll-forward via the write-ahead intent file.
+"""Multi-table atomic commits (several ``stage`` records, one
+``publish``): all-or-nothing visibility, conflict abort, and crash
+roll-forward via the write-ahead intent file.
 """
 
 from __future__ import annotations
@@ -18,13 +19,11 @@ def _df(spark, n):
 
 def test_commit_group_lands_both_tables(spark, tmp_path):
     cat = ParquetSnapshotCatalog(str(tmp_path / "cat"))
-    sids = cat.commit_group(
-        [
-            {"df": _df(spark, 5), "table": "a"},
-            {"df": _df(spark, 9), "table": "b"},
-        ]
-    )
+    staged = [(t, cat.stage(_df(spark, n), t), None) for t, n in (("a", 5), ("b", 9))]
+    cat.publish(staged)
+    sids = {t: s["id"] for t, s, _ in staged}
     assert set(sids) == {"a", "b"}
+    assert {t: cat.current_snapshot(t)["id"] for t in sids} == sids
     assert cat.read(spark, "a").count() == 5
     assert cat.read(spark, "b").count() == 9
     assert not [
@@ -37,16 +36,10 @@ def test_commit_group_conflict_aborts_everything(spark, tmp_path):
     s_a = cat.write_snapshot(_df(spark, 3), "a")
     cat.write_snapshot(_df(spark, 4), "b")
     with pytest.raises(CommitConflict):
-        cat.commit_group(
-            [
-                {"df": _df(spark, 10), "table": "a", "expected_current": s_a},
-                {
-                    "df": _df(spark, 10),
-                    "table": "b",
-                    "expected_current": "stale-id",
-                },
-            ]
-        )
+        cat.publish([
+            ("a", cat.stage(_df(spark, 10), "a"), s_a),
+            ("b", cat.stage(_df(spark, 10), "b"), "stale-id"),
+        ])
     # neither table moved, no orphan data dirs, no intent left behind
     assert cat.read(spark, "a").count() == 3
     assert cat.read(spark, "b").count() == 4

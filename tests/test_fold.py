@@ -193,6 +193,24 @@ def test_refresh_is_one_commit_group_within_the_job_budget(spark, split, tmp_pat
     assert sorted(swaps) == sorted([*TABLES, "lineage"])
 
 
+def test_fold_appends_only_its_own_lineage_rows(spark, split, tmp_path):
+    """A fold's lineage snapshot adds one file holding that fold's rows
+    alone; the earlier folds' rows are carried by reference."""
+    on_time, late = split
+    cat = ParquetSnapshotCatalog(str(tmp_path / "cat"))
+    _rollup_tiers(cat, on_time)
+    first = cat.current_snapshot("lineage")
+    _rollup_tiers(cat, late)
+    second = cat.current_snapshot("lineage")
+    assert second["refs"] == first["refs"] + [{"basePath": second["path"], "paths": None}]
+    assert len([f for f in os.listdir(second["path"]) if f.endswith(".parquet")]) == 1
+    own = spark.read.parquet(second["path"])
+    assert {r.snapshot for r in own.select("snapshot").distinct().collect()} == {
+        cat.current_snapshot(t)["id"] for t in TABLES}
+    assert cat.read(spark, "lineage").count() == (
+        spark.read.parquet(first["path"]).count() + own.count())
+
+
 CHILD = """
 import os, signal, sys
 sys.path.insert(0, {repo!r})

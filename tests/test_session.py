@@ -50,6 +50,14 @@ def test_session_uses_the_fork_free_filesystem(spark):
             == session.FS_CHECKPOINTS)
 
 
+def test_shuffle_output_buffer_uses_the_current_key(spark):
+    """The 1 MiB shuffle output buffer is set under its Spark 4 name;
+    the pre-4.0 name logs a deprecation warning on every conf copy."""
+    conf = dict(spark.sparkContext.getConf().getAll())
+    assert conf["spark.shuffle.localDisk.file.output.buffer"] == "1m"
+    assert "spark.shuffle.unsafe.file.output.buffer" not in conf
+
+
 def test_modes_match_the_stock_filesystem(spark, tmp_path):
     """Files and directories get the modes ``chmod`` gives them under
     Hadoop's stock filesystem (0644 and 0755 under umask 022), and an

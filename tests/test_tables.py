@@ -2,8 +2,10 @@
 still read, time-travel, take partition edits and expire; a table
 emptied by a TTL drop or a partition overwrite reads back with the
 columns and types it had; an unpartitioned snapshot reads without a
-Spark job; and expire_snapshots reclaims what a killed writer staged,
-but nothing a live writer or an open intent still needs."""
+Spark job; an append carries the committed files by reference, checks
+its schema and conflicts with a rival append; and expire_snapshots
+reclaims what a killed writer staged, but nothing a live writer or an
+open intent still needs."""
 
 from __future__ import annotations
 
@@ -14,11 +16,13 @@ import subprocess
 import sys
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
-from tests.test_runner import CHILD, REPO
+from tests.test_runner import CHILD, REPO, _files
 from tstoolbox_spark.datagen import generate_sequences
-from tstoolbox_spark.tables import ORPHAN_AGE_S, ParquetSnapshotCatalog
+from tstoolbox_spark.pipeline import lineage
+from tstoolbox_spark.tables import ORPHAN_AGE_S, CommitConflict, ParquetSnapshotCatalog
 
 
 def test_legacy_full_snapshot_manifest(spark, tmp_path):
@@ -85,7 +89,7 @@ def test_overwrite_to_empty_keeps_read_dtypes(spark, tmp_path):
 def test_unpartitioned_read_is_footer_free(spark, tmp_path):
     """No Spark job to read a whole-directory, unpartitioned snapshot,
     and the dtypes footer inference would give, also after a rename and
-    an added column."""
+    an added column, and for a table of several appended groups."""
     cat = ParquetSnapshotCatalog(str(tmp_path / "cat"))
     df = spark.sql(
         "SELECT CAST(id AS STRING) AS doc_id, array(CAST(id AS INT)) AS tokens, id AS n, "
@@ -96,20 +100,84 @@ def test_unpartitioned_read_is_footer_free(spark, tmp_path):
     path = cat.current_snapshot("t")["path"]
     tracker = spark.sparkContext.statusTracker()
 
-    def read_without_jobs():
+    def read_without_jobs(table):
         last = max(tracker.getJobIdsForGroup(None), default=-1)
-        out = cat.read(spark, "t")
+        out = cat.read(spark, table)
         assert [j for j in tracker.getJobIdsForGroup(None) if j > last] == []
         return out
 
-    assert read_without_jobs().dtypes == spark.read.parquet(path).dtypes
+    assert read_without_jobs("t").dtypes == spark.read.parquet(path).dtypes
     cat.rename_column("t", "v", "value")
     cat.add_column("t", "extra", "string")
     inferred = spark.read.parquet(path).withColumnRenamed("v", "value").withColumn(
         "extra", F.lit(None).cast("string"))
-    out = read_without_jobs()
+    out = read_without_jobs("t")
     assert out.dtypes == inferred.dtypes
     assert out.exceptAll(inferred).count() == 0 and inferred.exceptAll(out).count() == 0
+
+    # a lineage table grown by three appends: three groups, one scan
+    row = "unit string, stage string, snapshot string, rows_out long"
+    for i in range(3):
+        lineage.append_lineage(cat, spark, spark.createDataFrame([(f"u{i}", "s", "x", i)], row))
+    assert len(cat.current_snapshot("lineage")["refs"]) == 3
+    lin = read_without_jobs("lineage")
+    assert lin._jdf.queryExecution().executedPlan().toString().count("FileScan parquet") == 1
+    assert sorted(r.rows_out for r in lin.collect()) == [0, 1, 2]
+
+
+def _snap_dirs(cat, table):
+    return sorted(e for e in os.listdir(os.path.join(cat.root, table)) if e.startswith("snap-"))
+
+
+def _rows(spark, lo, hi):
+    return spark.range(lo, hi).selectExpr("id AS x", "CAST(id AS STRING) AS s")
+
+
+def test_append_carries_the_committed_files_by_reference(spark, tmp_path):
+    """An append lists the base's groups plus its own directory, leaves
+    the committed files as they were (bytes and mtime), time-travels
+    back to the base's rows, and survives ``expire_snapshots`` of the
+    base record."""
+    cat = ParquetSnapshotCatalog(str(tmp_path / "cat"))
+    cat.write_snapshot(_rows(spark, 0, 3), "t", properties={"batch_digests": ["a"]})
+    base = cat.current_snapshot("t")
+    files = _files(base["path"])
+    snap = cat.stage(_rows(spark, 3, 5), "t", append=True)
+    cat.publish([("t", snap, base["id"])])
+
+    cur = cat.current_snapshot("t")
+    assert cur["refs"] == base["refs"] + [{"basePath": cur["path"], "paths": None}]
+    assert cur["properties"]["batch_digests"] == ["a"]
+    assert _files(base["path"]) == files
+    assert sorted(r.x for r in cat.read(spark, "t").collect()) == [0, 1, 2, 3, 4]
+    assert sorted(r.x for r in cat.read(spark, "t", snapshot_id=base["id"]).collect()) == [0, 1, 2]
+    assert cat.expire_snapshots("t", keep_last=1) == 1
+    assert os.path.isdir(base["path"]) and _files(base["path"]) == files
+    assert sorted(r.x for r in cat.read(spark, "t").collect()) == [0, 1, 2, 3, 4]
+
+
+def test_append_with_other_columns_raises_before_writing(spark, tmp_path):
+    cat = ParquetSnapshotCatalog(str(tmp_path / "cat"))
+    cat.write_snapshot(_rows(spark, 0, 3), "t")
+    before = _snap_dirs(cat, "t")
+    for df in (_rows(spark, 3, 5).selectExpr("CAST(x AS INT) AS x", "s"),
+               _rows(spark, 3, 5).withColumn("extra", F.lit(1))):
+        with pytest.raises(ValueError, match="append to 't'"):
+            cat.stage(df, "t", append=True)
+    assert _snap_dirs(cat, "t") == before
+    assert cat.read(spark, "t").count() == 3
+
+
+def test_two_appends_on_one_base_cannot_both_land(spark, tmp_path):
+    cat = ParquetSnapshotCatalog(str(tmp_path / "cat"))
+    base = cat.write_snapshot(_rows(spark, 0, 3), "t")
+    first = cat.stage(_rows(spark, 3, 5), "t", append=True)
+    second = cat.stage(_rows(spark, 5, 9), "t", append=True)
+    cat.publish([("t", first, base)])
+    with pytest.raises(CommitConflict):
+        cat.publish([("t", second, base)])
+    assert not os.path.exists(second["path"])
+    assert sorted(r.x for r in cat.read(spark, "t").collect()) == [0, 1, 2, 3, 4]
 
 
 def _age(path, seconds):

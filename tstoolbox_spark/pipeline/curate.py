@@ -119,32 +119,21 @@ def _stage(
                         "secs": round(_time.time() - t0, 2)}
         return out
     t0 = _time.time()
-    df = build()
-
+    df = build().localCheckpoint()
+    n = df.count()
     # lineage row built off range(1), NOT off the stage data — a stage
     # that (correctly) empties the corpus still records its funnel row
-    def _lin(n: int):
-        return spark.range(1).select(
-            F.lit(name).alias("unit"),
-            F.lit(f"curate:{name}").alias("stage"),
-            F.lit(f"group:curate:{name}").alias("snapshot"),
-            F.lit(n).cast("long").alias("rows_out"),
-        )
-
-    df = df.localCheckpoint()
-    n = df.count()
-    lin_new = _lin(n)
-    if catalog.exists(_lineage.LINEAGE_TABLE):
-        all_lin = catalog.read(spark, _lineage.LINEAGE_TABLE).unionByName(
-            lin_new, allowMissingColumns=True
-        )
-        expected_l = catalog.current_snapshot(_lineage.LINEAGE_TABLE)["id"]
-    else:
-        all_lin, expected_l = lin_new, None
-    catalog.commit_group([
-        {"df": df, "table": table, "expected_current": None},
-        {"df": all_lin, "table": _lineage.LINEAGE_TABLE,
-         "expected_current": expected_l},
+    row = spark.range(1).select(
+        F.lit(name).alias("unit"),
+        F.lit(f"curate:{name}").alias("stage"),
+        F.lit(f"group:curate:{name}").alias("snapshot"),
+        F.lit(n).cast("long").alias("rows_out"),
+    )
+    lin = catalog.current_snapshot(_lineage.LINEAGE_TABLE)
+    catalog.publish([
+        (table, catalog.stage(df, table), None),
+        (_lineage.LINEAGE_TABLE, catalog.stage(row, _lineage.LINEAGE_TABLE, append=True),
+         lin and lin["id"]),
     ])
     out = catalog.read(spark, table)
     report[name] = {"rows": n, "resumed": False,

@@ -9,9 +9,9 @@ propagation over the whole corpus — the dedup analog of
 ``incremental_tier_refresh`` (late rollup partials merge into tiers;
 new docs merge into clusters).
 
-State carried between batches (both committable through
-:class:`~tstoolbox_spark.tables.ParquetSnapshotCatalog`, atomically,
-via ``commit_group``):
+State carried between batches (committed through
+:class:`~tstoolbox_spark.tables.ParquetSnapshotCatalog` as one commit
+group per batch, the band rows as an append):
 
 - ``bands``: ``(doc, band, bh)`` — every committed doc's LSH band
   hashes (b rows per doc). A new doc's candidates against the ENTIRE
@@ -313,41 +313,15 @@ def commit_dedup_state(
     version, optionally the corpus table grows by the batch's docs
     (the streaming twin owns its corpus; callers with an external
     corpus omit it), and a lineage row records the batch —
-    all-or-nothing via the catalog's two-phase ``commit_group``
-    (a reader never sees new bands with stale clusters or vice
-    versa). Returns {table: snapshot_id}.
-
-    Scale note: the sandbox catalog's snapshot primitive is a full
-    table write, so the band/corpus "append" here re-materializes the
-    table; on the real Iceberg format both are appendFiles — a
-    metadata-only manifest commit. The incremental COMPUTE (candidates,
-    verify, touched-subgraph propagation) is what this module buys;
-    append I/O is the table format's job (tables.py header documents
-    the divergence)."""
-    if catalog.exists(BANDS_TABLE):
-        prev = catalog.read(spark, BANDS_TABLE)
-        all_bands = prev.unionByName(new_band_rows)
-        expected_b = catalog.current_snapshot(BANDS_TABLE)["id"]
-        expected_c = catalog.current_snapshot(CLUSTERS_TABLE)["id"]
-    else:
-        all_bands = new_band_rows
-        expected_b = expected_c = None
-    writes = [
-        {"df": all_bands, "table": BANDS_TABLE,
-         "expected_current": expected_b},
-        {"df": clusters, "table": CLUSTERS_TABLE,
-         "expected_current": expected_c},
-    ]
+    all-or-nothing as one catalog commit group (a reader never sees
+    new bands with stale clusters or vice versa). Bands, corpus and
+    lineage are catalog appends: the batch's rows land as new files
+    beside the committed ones, which are never read or rewritten, so
+    their commit is O(batch). Returns {table: snapshot_id}."""
+    tables = [BANDS_TABLE, CLUSTERS_TABLE, _lineage.LINEAGE_TABLE]
     if corpus_append is not None:
-        if catalog.exists(CORPUS_TABLE):
-            all_corpus = catalog.read(spark, CORPUS_TABLE).unionByName(
-                corpus_append
-            )
-            expected_cr = catalog.current_snapshot(CORPUS_TABLE)["id"]
-        else:
-            all_corpus, expected_cr = corpus_append, None
-        writes.append({"df": all_corpus, "table": CORPUS_TABLE,
-                       "expected_current": expected_cr})
+        tables.append(CORPUS_TABLE)
+    expected = {t: (catalog.current_snapshot(t) or {}).get("id") for t in tables}
     # the lineage row rides IN the commit group: state and its batch
     # unit land in one atomic swap, so a crash can never leave state
     # committed without the unit row (the streaming exactly-once skip
@@ -355,22 +329,21 @@ def commit_dedup_state(
     # deterministic group token — per-table snapshot ids are assigned
     # inside the commit and are discoverable from the manifests.
     n_rows = clusters.count()
-    lin_new = spark.range(1).select(
+    row = spark.range(1).select(
         F.lit(batch_unit).alias("unit"),
         F.lit(f"dedup:{CLUSTERS_TABLE}").alias("stage"),
         F.lit(f"group:{batch_unit}").alias("snapshot"),
         F.lit(n_rows).cast("long").alias("rows_out"),
     )
-    if catalog.exists(_lineage.LINEAGE_TABLE):
-        all_lin = catalog.read(spark, _lineage.LINEAGE_TABLE).unionByName(
-            lin_new, allowMissingColumns=True
-        )
-        expected_l = catalog.current_snapshot(_lineage.LINEAGE_TABLE)["id"]
-    else:
-        all_lin, expected_l = lin_new, None
-    writes.append({"df": all_lin, "table": _lineage.LINEAGE_TABLE,
-                   "expected_current": expected_l})
-    return catalog.commit_group(writes)
+    staged = {
+        BANDS_TABLE: catalog.stage(new_band_rows, BANDS_TABLE, append=True),
+        CLUSTERS_TABLE: catalog.stage(clusters, CLUSTERS_TABLE),
+        _lineage.LINEAGE_TABLE: catalog.stage(row, _lineage.LINEAGE_TABLE, append=True),
+    }
+    if corpus_append is not None:
+        staged[CORPUS_TABLE] = catalog.stage(corpus_append, CORPUS_TABLE, append=True)
+    catalog.publish([(t, s, expected[t]) for t, s in staged.items()])
+    return {t: s["id"] for t, s in staged.items()}
 
 
 def continuous_near_dup_clusters(
@@ -398,7 +371,6 @@ def continuous_near_dup_clusters(
     batch is either fully folded with its lineage row or absent.
     Returns the StreamingQuery.
     """
-    from . import lineage as _lineage
 
     def _fold(batch_df, batch_id: int):
         unit = f"stream:{batch_id}"

@@ -17,6 +17,11 @@ remainder; because data + lineage commit under the same snapshot swap
 (one ``publish`` of a catalog commit group: runner.py, and the tier
 fold in partials.py), a unit is either fully present with its lineage
 row or absent — never double-counted.
+
+Every writer adds its rows as a catalog APPEND (``stage(...,
+append=True)``): one new file beside the committed ones, which are
+never read or rewritten, so a lineage write costs O(its own rows), not
+O(every row ever recorded).
 """
 
 from __future__ import annotations
@@ -56,20 +61,9 @@ def lineage_rows(
     )
 
 
-def appended(catalog: ParquetSnapshotCatalog, spark: SparkSession, rows: DataFrame) -> DataFrame:
-    """The lineage table with ``rows`` appended, as one file (old + new
-    union — lineage is tiny: one row per work unit per stage), for a
-    caller to stage beside the data it describes."""
-    if catalog.exists(LINEAGE_TABLE):
-        rows = catalog.read(spark, LINEAGE_TABLE).unionByName(rows)
-    return rows.coalesce(1)
-
-
-def append_lineage(
-    catalog: ParquetSnapshotCatalog, spark: SparkSession, rows: DataFrame
-) -> str:
-    """Append lineage rows as a new lineage snapshot on its own."""
-    return catalog.write_snapshot(appended(catalog, spark, rows), LINEAGE_TABLE)
+def append_lineage(catalog: ParquetSnapshotCatalog, spark: SparkSession, rows: DataFrame) -> str:
+    """Append lineage rows, as one file, as a new lineage snapshot on its own."""
+    return catalog.write_snapshot(rows.coalesce(1), LINEAGE_TABLE, append=True)
 
 
 def completed_units(

@@ -13,13 +13,14 @@ report reads that table. This module is the write-once step:
     )
 
 The derived table is keyed by a fingerprint of (name, params, input
-file stats), committed through :class:`ParquetSnapshotCatalog` so it
-inherits atomic snapshot swaps, optimistic concurrency, TTL expiry and
-a lineage row (stage ``mv:<name>``, unit = fingerprint) — the same
-bookkeeping path as the 1m/1h/1d rollup tiers.  A second builder
-racing on the same fingerprint loses the snapshot commit and simply
-reads the winner's table; a changed corpus or parameter set gets a new
-fingerprint directory and never aliases stale results.
+file stats), committed through :class:`ParquetSnapshotCatalog` in one
+commit group with its lineage row (stage ``mv:<name>``, unit =
+fingerprint), so it inherits atomic snapshot swaps, optimistic
+concurrency and TTL expiry — the same bookkeeping path as the
+1m/1h/1d rollup tiers. A second builder racing on the same
+fingerprint loses the snapshot commit and simply reads the winner's
+table; a changed corpus or parameter set gets a new fingerprint
+directory and never aliases stale results.
 """
 
 from __future__ import annotations
@@ -82,17 +83,20 @@ def materialized_view(
     root = os.path.join(cache_root or DEFAULT_ROOT, name, fp)
     catalog = ParquetSnapshotCatalog(root)
     if not catalog.exists(name):
-        df = build(spark)
-        try:
-            snap = catalog.write_snapshot(df, name)
-            written = catalog.read(spark, name)
-            lin = written.agg(F.count("*").alias("rows_out")).select(
-                F.lit(fp).alias("unit"),
-                F.lit(f"mv:{name}").alias("stage"),
-                F.lit(snap).alias("snapshot"),
-                "rows_out",
-            )
-            _lineage.append_lineage(catalog, spark, lin)
+        lin = catalog.current_snapshot(_lineage.LINEAGE_TABLE)
+        snap = catalog.stage(build(spark), name)
+        row = catalog.scan(spark, snap).agg(F.count("*").alias("rows_out")).select(
+            F.lit(fp).alias("unit"),
+            F.lit(f"mv:{name}").alias("stage"),
+            F.lit(snap["id"]).alias("snapshot"),
+            "rows_out",
+        )
+        try:  # the view lands with its lineage row, or not at all
+            catalog.publish([
+                (name, snap, None),
+                (_lineage.LINEAGE_TABLE, catalog.stage(row, _lineage.LINEAGE_TABLE, append=True),
+                 lin and lin["id"]),
+            ])
         except CommitConflict:
             pass  # a concurrent builder committed first; read theirs
     return catalog.read(spark, name)

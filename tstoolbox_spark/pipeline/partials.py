@@ -161,8 +161,9 @@ def stage_tiers(
     days: list[str] | None = None, properties: dict | None = None,
 ) -> dict[str, dict]:
     """Stage ``tiers`` (finest first) of ``spec`` from ``finest``, the
-    finest tier's partials, plus their lineage rows appended to the
-    lineage table; returns {table: staged record} in publish order.
+    finest tier's partials, plus their lineage rows as one file
+    appended to the lineage table; returns {table: staged record} in
+    publish order.
     ``finest`` is laid out by day (``rollup.day_layout``) and cached
     once; each coarser tier is cascaded from it with ``day`` among the
     group keys, so the cached clustering serves its aggregate and its
@@ -182,9 +183,9 @@ def stage_tiers(
             lineage.lineage_rows(df, t, staged[t]["id"], [*key_cols, "day"])
             for t, df in frames.items()
         ]
-        lin = lineage.appended(
-            catalog, top.sparkSession, functools.reduce(DataFrame.unionByName, rows))
-        staged[lineage.LINEAGE_TABLE] = catalog.stage(lin, lineage.LINEAGE_TABLE, properties=properties)
+        lin = functools.reduce(DataFrame.unionByName, rows).coalesce(1)
+        staged[lineage.LINEAGE_TABLE] = catalog.stage(
+            lin, lineage.LINEAGE_TABLE, properties=properties, append=True)
     finally:
         top.unpersist()
     return staged

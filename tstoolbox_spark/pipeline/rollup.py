@@ -27,7 +27,7 @@ resample's left-closed/left-labeled default for T/H/D.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import partials
@@ -72,6 +72,32 @@ def hist_cascade(finer: DataFrame, tier: str, key_cols: tuple[str, ...] = ("sour
     return partials.cascade(partials.HIST, finer, tier, key_cols)
 
 
+def _cumulative(hist: DataFrame, key_cols: tuple[str, ...]) -> tuple[list[str], DataFrame]:
+    """The (key, bucket) columns, and histogram partials with each
+    value's running count ``__cum`` (ordered by value within its
+    bucket) and the bucket's total ``__tot``: the one window every
+    rank read below shares. Partitions hold <= |domain| rows, so the
+    sort is trivial."""
+    keys = [*key_cols, "ts"]
+    bucket = Window.partitionBy(*keys)
+    cum = F.sum("cnt").over(bucket.orderBy("v"))
+    tot = F.sum("cnt").over(bucket)
+    return keys, hist.select(*keys, "v", "cnt", cum.alias("__cum"), tot.alias("__tot"))
+
+
+def _trimmed(alpha: float) -> tuple[Column, Column, Column]:
+    """Over :func:`_cumulative` rows: the trim depth k = floor(α·n),
+    the top kept rank n − k, and how many of the value's occurrences
+    (ranks cum−cnt+1 .. cum) fall inside (k, n − k]."""
+    k = F.floor(F.lit(float(alpha)) * F.col("__tot")).cast("long")
+    hi = F.col("__tot") - k
+    kept = F.greatest(
+        F.lit(0).cast("long"),
+        F.least(F.col("__cum"), hi) - F.greatest(F.col("__cum") - F.col("cnt"), k),
+    )
+    return k, hi, kept
+
+
 def hist_quantiles(
     hist: DataFrame,
     qs: tuple[float, ...] = (0.5, 0.9, 0.99),
@@ -86,12 +112,7 @@ def hist_quantiles(
     sizes <= |domain|, so the sort is trivial) and one aggregate —
     reading quantiles never touches raw rows.
     """
-    keys = [*key_cols, "ts"]
-    bucket = Window.partitionBy(*keys)
-    byval = bucket.orderBy("v")
-    cum = F.sum("cnt").over(byval)
-    total = F.sum("cnt").over(bucket)
-    h = hist.select(*keys, "v", cum.alias("__cum"), total.alias("__tot"))
+    keys, h = _cumulative(hist, key_cols)
     aggs = []
     for q in qs:
         thr = F.greatest(F.ceil(F.lit(q) * F.col("__tot")), F.lit(1))
@@ -176,21 +197,8 @@ def hist_trimmed_mean(
     """
     if not 0.0 <= trim < 0.5:
         raise ValueError(f"trim must be in [0, 0.5), got {trim}")
-    keys = [*key_cols, "ts"]
-    bucket = Window.partitionBy(*keys)
-    byval = bucket.orderBy("v")
-    cum = F.sum("cnt").over(byval)
-    tot = F.sum("cnt").over(bucket)
-    h = hist.select(
-        *keys, "v", "cnt", cum.alias("__cum"), tot.alias("__tot")
-    )
-    lo = F.floor(F.lit(float(trim)) * F.col("__tot")).cast("long")
-    hi = F.col("__tot") - lo
-    kept = F.greatest(
-        F.lit(0).cast("long"),
-        F.least(F.col("__cum"), hi)
-        - F.greatest(F.col("__cum") - F.col("cnt"), lo),
-    )
+    keys, h = _cumulative(hist, key_cols)
+    _, _, kept = _trimmed(trim)
     agg = h.groupBy(*keys).agg(
         F.sum(F.col("v").cast("long") * kept).alias("__wsum"),
         F.sum(kept).alias("n_kept"),
@@ -225,21 +233,8 @@ def hist_winsorized_mean(
     """
     if not 0.0 <= alpha < 0.5:
         raise ValueError(f"alpha must be in [0, 0.5), got {alpha}")
-    keys = [*key_cols, "ts"]
-    bucket = Window.partitionBy(*keys)
-    byval = bucket.orderBy("v")
-    cum = F.sum("cnt").over(byval)
-    tot = F.sum("cnt").over(bucket)
-    h = hist.select(
-        *keys, "v", "cnt", cum.alias("__cum"), tot.alias("__tot")
-    )
-    k = F.floor(F.lit(float(alpha)) * F.col("__tot")).cast("long")
-    hi = F.col("__tot") - k
-    kept = F.greatest(
-        F.lit(0).cast("long"),
-        F.least(F.col("__cum"), hi)
-        - F.greatest(F.col("__cum") - F.col("cnt"), k),
-    )
+    keys, h = _cumulative(hist, key_cols)
+    k, hi, kept = _trimmed(alpha)
     agg = h.groupBy(*keys).agg(
         F.sum(F.col("v").cast("long") * kept).alias("__wsum"),
         F.min(F.when(F.col("__cum") >= k + 1, F.col("v"))).alias("__vlo"),
@@ -298,12 +293,7 @@ def iqr_fences(
     every tier without rescanning raw. Same |domain|-bounded window
     as hist_quantiles.
     """
-    keys = [*key_cols, "ts"]
-    bucket = Window.partitionBy(*keys)
-    byval = bucket.orderBy("v")
-    cum = F.sum("cnt").over(byval)
-    tot = F.sum("cnt").over(bucket)
-    h = hist.select(*keys, "v", "cnt", cum.alias("__cum"), tot.alias("__tot"))
+    keys, h = _cumulative(hist, key_cols)
     q1thr = F.greatest(F.ceil(F.lit(0.25) * F.col("__tot")), F.lit(1))
     q3thr = F.greatest(F.ceil(F.lit(0.75) * F.col("__tot")), F.lit(1))
     g = h.groupBy(*keys).agg(

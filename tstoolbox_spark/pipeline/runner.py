@@ -124,15 +124,15 @@ def run_pipeline(
                 F.sum("raw_bytes").alias("raw"),
                 F.sum("enc_bytes").alias("enc"),
             )
-            snap = catalog.stage(comp, "compressed", compression="uncompressed")
+            # a resume appends: the committed blobs are carried by reference
+            snap = catalog.stage(comp, "compressed", compression="uncompressed", append=resume)
             staged["compressed"] = snap
-            # one row per cell, read into one partition: no shuffle
-            blobs = catalog.scan(spark, snap).coalesce(1)
+            # the new directory's cells, one row each, read into one
+            # partition: no shuffle
+            blobs = catalog.scan(spark, dict(snap, refs=snap["refs"][-1:])).coalesce(1)
             lin = lineage.lineage_rows(blobs, "compress", snap["id"], UNIT_COLS)
             staged[lineage.LINEAGE_TABLE] = catalog.stage(
-                lineage.appended(catalog, spark, lin), lineage.LINEAGE_TABLE)
-            if committed is not None:  # resume appends: committed blobs by reference
-                snap["refs"] = catalog.current_snapshot("compressed")["refs"] + snap["refs"]
+                lin.coalesce(1), lineage.LINEAGE_TABLE, append=True)
             new = sizes.get
             metrics.setdefault("cells_pending", new["cells"])
             raw, enc = new["raw"] or 0, new["enc"] or 0

@@ -203,7 +203,7 @@ def get_spark(
         # write syscalls.
         .config("spark.buffer.pageSize", "64m")
         .config("spark.shuffle.file.buffer", "1m")
-        .config("spark.shuffle.unsafe.file.output.buffer", "1m")
+        .config("spark.shuffle.localDisk.file.output.buffer", "1m")
         .config("spark.memory.offHeap.enabled", "true")
         .config(
             "spark.memory.offHeap.size",

@@ -29,13 +29,15 @@ a list of data-file references::
 plus either ``paths: null`` (the whole directory) or the partition
 directories kept from it. ``path`` is the data directory the snapshot
 owns (reclaimed when it expires), or null for a metadata-only snapshot.
-``stage`` yields one whole-directory group, or, when it replaces a
-list of partitions, the current snapshot's untouched groups plus the
-new directory's; a TTL drop keeps the retained groups; schema
-evolution reuses the current ``refs`` and records ``renames``/
-``added``, which reads apply. When no group is left, reads rebuild the
-empty frame from ``schema``. A whole-directory group of an
-unpartitioned snapshot is read with ``schema`` (no footer inference).
+``stage`` yields one whole-directory group; when it replaces a list
+of partitions, the current snapshot's untouched groups plus the new
+directory's; when it appends, the current snapshot's groups plus the
+new directory (Iceberg's ``appendFiles``: nothing committed is read or
+rewritten). A TTL drop keeps the retained groups; schema evolution
+reuses the current ``refs`` and records ``renames``/``added``, which
+reads apply. When no group is left, reads rebuild the empty frame from
+``schema``. The whole-directory groups of an unpartitioned snapshot
+are read with ``schema`` in one scan (no footer inference).
 
 Manifests written before this shape have ``path`` and no ``refs`` (or
 ``basePath``/``paths`` on metadata-only records); ``_normalize`` maps
@@ -49,10 +51,12 @@ rename), so readers always see a complete snapshot and a killed writer
 leaves the previous snapshot current — the property the resume test
 (§5.3.4) relies on. ``write_snapshot`` and ``overwrite_partitions`` are
 one ``stage`` + one ``publish``; a caller that stages several tables
-(the pipeline's tier fold) publishes them as one group. A lease whose
-owner died on this host is broken by the next committer; the staged
-dirs and lease debris a dead writer leaves are reclaimed by
-``expire_snapshots`` once old.
+(the pipeline's tier fold, a dedup batch, a curation stage with its
+lineage row) publishes them as one group, each validated against the
+snapshot it was staged on, so two appends staged on one base cannot
+both land. A lease whose owner died on this host is broken by the next
+committer; the staged dirs and lease debris a dead writer leaves are
+reclaimed by ``expire_snapshots`` once old.
 
 Interop contract — what this catalog IS and IS NOT (VERDICT r3 #8):
 
@@ -80,7 +84,7 @@ NOT PROVIDED (real-Iceberg features that need the table FORMAT):
     catalog services (REST/Hive/Glue).
 
 Porting to real Iceberg is mechanical and confined to this module:
-stage + publish → a (multi-table) transaction of appends /
+stage + publish → a (multi-table) transaction of appendFiles /
 overwritePartitions, read(snapshot_id) → VERSION AS OF,
 drop_partitions_before → DELETE WHERE, expire_snapshots →
 expireSnapshots + remove_orphan_files; every caller (the pipeline's
@@ -162,6 +166,12 @@ def _record(base: dict, **changes) -> dict:
     carried = {k: v for k, v in base["properties"].items() if k in CARRIED}
     props = {**carried, **changes.pop("properties", {})}
     return {**base, "id": sid, "ts": time.time(), "path": None, "properties": props, **changes}
+
+
+def _types(schema: dict) -> dict[str, str]:
+    """Column name → type, nullability aside (file scans read every
+    column as nullable)."""
+    return {f.name: f.dataType.simpleString() for f in StructType.fromJson(schema)}
 
 
 def _filter_groups(refs: list[dict], partition_col: str, keep) -> list[dict]:
@@ -307,6 +317,7 @@ class ParquetSnapshotCatalog:
         properties: dict | None = None,
         compression: str | None = None,
         replace: list[str] | None = None,
+        append: bool = False,
     ) -> dict:
         """Phase 1 of a commit: land the data files in a new snap dir and
         return the snapshot record — durable but NOT yet referenced by
@@ -326,19 +337,35 @@ class ParquetSnapshotCatalog:
         Iceberg's ``overwritePartitions`` (zero rows of untouched data
         rewritten: at 100 TB an hourly late-data refresh rewrites ~1 day
         directory, not the tier). With no group left, the record keeps
-        the current read schema (:meth:`_kept_schema`)."""
-        cur = None
+        the current read schema (:meth:`_kept_schema`).
+
+        ``append`` adds ``df``'s rows to the table: the record's
+        ``refs`` are the current snapshot's groups plus the new
+        directory, last — Iceberg's ``appendFiles`` (no committed row
+        read or rewritten; the table keeps its ``partition_by``). The
+        old groups are read with the recorded schema, so ``df``'s
+        columns and types must match it: a mismatch raises ValueError
+        before anything is written. Publish it against the snapshot it
+        extends."""
+        cur = self.current_snapshot(table) if append or replace is not None else None
         if replace is not None:
             (col,) = partition_by
             replace = sorted(set(replace))
             df = df.where(F.col(col).isin(replace))
             properties = {**(properties or {}), "overwrite_partitions": replace}
-            cur = self.current_snapshot(table)
+        schema = json.loads(df.schema.json())
+        if append and cur:
+            if cur["schema"] and _types(cur["schema"]) != _types(schema):
+                raise ValueError(
+                    f"append to {table!r}: columns {_types(schema)} differ from the "
+                    f"table's {_types(cur['schema'])}"
+                )
+            partition_by = cur["partition_by"]
         snap = _record(
             cur or _BLANK,
             partition_by=partition_by or [],
             properties=properties or {},
-            schema=json.loads(df.schema.json()),
+            schema=schema,
             fields=self._assign_field_ids(table, df.columns),
         )
         snap["path"] = data_dir = os.path.join(self.root, table, f"snap-{snap['id']}")
@@ -353,6 +380,8 @@ class ParquetSnapshotCatalog:
             kept = _filter_groups(cur["refs"], col, lambda v: v not in replace) if cur else []
             snap["refs"] = kept + _filter_groups(snap["refs"], col, lambda v: True)
             snap["schema"] = self._kept_schema(df.sparkSession, table, snap["refs"], snap["schema"])
+        elif append and cur:
+            snap["refs"] = cur["refs"] + snap["refs"]
         return snap
 
     def publish(self, commits: list[tuple], intent: str | None = None) -> None:
@@ -403,6 +432,7 @@ class ParquetSnapshotCatalog:
         properties: dict | None = None,
         compression: str | None = None,
         expected_current: str | None | object = _UNSET,
+        append: bool = False,
     ) -> str:
         """Write df as a new snapshot of ``table`` (:meth:`stage`, then
         :meth:`publish`); returns snapshot id. The snapshot becomes
@@ -413,9 +443,13 @@ class ParquetSnapshotCatalog:
         write runs OUTSIDE the commit lock (as in Iceberg — data files
         first, metadata swap last), and the commit raises
         CommitConflict if another writer landed in between, deleting
-        this writer's orphaned data directory.
+        this writer's orphaned data directory. An ``append`` without
+        one expects the snapshot it extends: a lost race must not drop
+        the winner's rows.
         """
-        snap = self.stage(df, table, partition_by, properties, compression)
+        if append and expected_current is _UNSET:
+            expected_current = (self.current_snapshot(table) or {}).get("id")
+        snap = self.stage(df, table, partition_by, properties, compression, append=append)
         self.publish([(table, snap, expected_current)])
         return snap["id"]
 
@@ -434,36 +468,6 @@ class ParquetSnapshotCatalog:
                 next_id += 1
                 out[n] = next_id
         return out
-
-    def commit_group(self, writes: list[dict]) -> dict[str, str]:
-        """All-or-nothing commit across MULTIPLE tables (the Iceberg
-        multi-table-transaction analog; e.g. the sum-partial tier and
-        its histogram twin must never be visible half-updated).
-
-        ``writes``: [{'df', 'table', 'partition_by'?, 'properties'?,
-        'compression'?, 'expected_current'?}, ...].
-
-        Two-phase protocol: :meth:`stage` lands every table's data dir
-        (durable, unreferenced), then one :meth:`publish` swaps every
-        manifest. A conflict aborts the whole group (data dirs + intent
-        deleted, CommitConflict); after a crash between swaps,
-        :meth:`recover_pending` rolls the group FORWARD, so readers
-        either see none or all of the group after repair.
-        Returns {table: snapshot_id}.
-        """
-        staged = [
-            (
-                w["table"],
-                self.stage(
-                    w["df"], w["table"], w.get("partition_by"),
-                    w.get("properties"), w.get("compression"),
-                ),
-                w.get("expected_current", _UNSET),
-            )
-            for w in writes
-        ]
-        self.publish(staged)
-        return {t: s["id"] for t, s, _ in staged}
 
     def recover_pending(self) -> int:
         """Roll FORWARD any crashed commits: for every intent file,
@@ -656,25 +660,29 @@ class ParquetSnapshotCatalog:
         return self.scan(spark, next(s for s in m["snapshots"] if s["id"] == sid))
 
     def scan(self, spark: SparkSession, snap: dict) -> DataFrame:
-        """Read a snapshot record, published or only staged: one scan
-        per non-empty ``refs`` group, unioned by name. A whole-directory
-        group of an unpartitioned snapshot is read with the schema its
-        record carries: no footer inference, so no Spark job until an
-        action. A partitioned one infers from the footers, and a
-        partition list keeps its ``basePath`` so the partition column
-        is recovered from the directory names (typed as read). With no
+        """Read a snapshot record, published or only staged. An
+        unpartitioned snapshot is ONE scan of every group's directory
+        with the schema its record carries: no footer inference, so no
+        Spark job until an action, and an appended table stays one scan
+        node. A partitioned one is one scan per non-empty ``refs``
+        group, unioned by name, inferring from the footers; a partition
+        list keeps its ``basePath`` so the partition column is
+        recovered from the directory names (typed as read). With no
         group left, the empty frame comes from the recorded schema (no
         scan). Renames and added columns apply last (Iceberg resolves
         the same way via field ids in the file footers)."""
         schema = snap["schema"] and StructType.fromJson(snap["schema"])
-        reader = spark.read.schema(schema) if schema and not snap["partition_by"] else spark.read
-        scans = [
-            reader.parquet(g["basePath"])
-            if g["paths"] is None
-            else spark.read.option("basePath", g["basePath"]).parquet(*g["paths"])
-            for g in snap["refs"]
-            if g["paths"] != []
-        ]
+        live = [g for g in snap["refs"] if g["paths"] != []]
+        if schema and not snap["partition_by"]:
+            dirs = [p for g in live for p in g["paths"] or [g["basePath"]]]
+            scans = [spark.read.schema(schema).parquet(*dirs)] if dirs else []
+        else:
+            scans = [
+                spark.read.parquet(g["basePath"])
+                if g["paths"] is None
+                else spark.read.option("basePath", g["basePath"]).parquet(*g["paths"])
+                for g in live
+            ]
         if scans:
             df = functools.reduce(DataFrame.unionByName, scans)
         else:
